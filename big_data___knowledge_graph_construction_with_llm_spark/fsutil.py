@@ -164,16 +164,6 @@ def list_files(spark: SparkSession, path: str) -> list[tuple[str, int]]:
     return out
 
 
-def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """``FileSystem.rename`` — atomic directory move on HDFS/local, a
-    COPY on object stores (S3A emulates rename); callers doing
-    swap-into-place (``operators.layout.compact_small_files``) must
-    document that window."""
-    fs, s = _fs(spark, src)
-    _, d = _fs(spark, dst)
-    return bool(fs.rename(s, d))
-
-
 def mtime(spark: SparkSession, path: str) -> int:
     """Modification time of ``path`` in epoch millis, 0 if absent.
     Works on any configured filesystem (the ``os.path.getmtime``

@@ -90,11 +90,12 @@ def materialize(df: DataFrame) -> DataFrame:
     enqueued BEFORE this call started (the one-generation grace of
     :func:`release`): those frames' last legitimate reader finished
     before this job began, and a full job has since run to completion,
-    so nothing scheduled can still be holding their blocks."""
+    so nothing scheduled can still be holding their blocks — which is
+    also why the drain can block until the blocks are really gone."""
     with _release_lock:
         entry_ticket = _release_ticket
     out = _materializer(df)
-    _drain_releases(entry_ticket)
+    _drain_releases(entry_ticket, blocking=True)
     return out
 
 
@@ -114,14 +115,22 @@ def _unpersist_now(df: DataFrame, blocking: bool) -> None:
 def _drain_releases(up_to_ticket: int, blocking: bool = False) -> None:
     """Unpersist every queued frame whose release ticket is at or below
     ``up_to_ticket`` (i.e. released before the draining materialize
-    STARTED); later entries stay queued for the next drain."""
+    STARTED); later entries stay queued for the next drain. Every due
+    frame is attempted even when one ``unpersist`` raises; the first
+    error re-raises after the loop."""
     with _release_lock:
         due = [df for t, df in _pending_release if t <= up_to_ticket]
         _pending_release[:] = [
             (t, df) for t, df in _pending_release if t > up_to_ticket
         ]
+    first: Exception | None = None
     for df in due:
-        _unpersist_now(df, blocking)
+        try:
+            _unpersist_now(df, blocking)
+        except Exception as exc:
+            first = first or exc
+    if first is not None:
+        raise first
 
 
 def flush_releases(blocking: bool = True) -> None:

@@ -7,7 +7,8 @@ them — they decide how many bytes every later scan has to touch:
    thousands of KB-sized part files; each one costs a namenode/S3
    LIST + open + footer read per scan, and Spark packs them into
    read tasks no better than ``maxPartitionBytes`` lets it.
-   → :func:`compact_small_files` (+ :func:`file_stats` to decide when).
+   → :func:`compact_table` (marker-last generation rewrite;
+   :func:`maybe_compact_table` decides when).
 2. **Scan selectivity.** Parquet keeps per-row-group min/max stats,
    and Spark's scan skips row groups whose stats exclude the pushed
    filter — but a corpus written in arrival order has near-full-range
@@ -18,9 +19,9 @@ them — they decide how many bytes every later scan has to touch:
    Point lookups on HIGH-CARDINALITY columns (doc ids, content
    fingerprints) defeat both spans and clustering — a random value
    falls inside nearly every file's min/max — so generations can
-   carry per-file BLOOM filters (``write_table(bloom_cols=)`` /
-   :func:`add_manifest_blooms`): a ``_MANIFEST_BLOOM`` sidecar the
-   pruned read consults to open only files that may hold the value.
+   carry per-file BLOOM filters (``write_table(bloom_cols=)``): a
+   ``_MANIFEST_BLOOM`` sidecar the pruned read consults to open only
+   files that may hold the value.
 3. **Verification.** Footer-stats truth, not vibes:
    :func:`clustering_stats` reads the parquet footers and reports the
    per-file min/max spans and how much they overlap.
@@ -42,107 +43,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data___knowledge_graph_construction_with_llm_spark import fsutil
-
-#: files smaller than this fraction of the target are "small" in
-#: :func:`file_stats`'s advisory count
-_SMALL_FRACTION = 0.5
-
-
-def file_stats(
-    spark: SparkSession, path: str, target_file_bytes: int = 128 << 20
-) -> dict:
-    """Leaf-file census of a dataset directory: the numbers that decide
-    whether :func:`compact_small_files` is worth a rewrite. Pure
-    listing — no data bytes are read, so it is safe to run against a
-    100 TB path (one recursive LIST)."""
-    files = fsutil.list_files(spark, path)
-    sizes = sorted(sz for _, sz in files)
-    total = sum(sizes)
-    return {
-        "n_files": len(sizes),
-        "total_bytes": total,
-        "min_file_bytes": sizes[0] if sizes else 0,
-        "max_file_bytes": sizes[-1] if sizes else 0,
-        "mean_file_bytes": total // len(sizes) if sizes else 0,
-        "n_small_files": sum(
-            1 for s in sizes if s < target_file_bytes * _SMALL_FRACTION
-        ),
-        "target_file_bytes": target_file_bytes,
-    }
-
-
-def compact_small_files(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    partition_by: list[str] | None = None,
-    shuffle: bool = False,
-    verify: bool = True,
-) -> dict:
-    """Rewrite a parquet dataset into ~``target_file_bytes`` files and
-    swap it into place; returns before/after :func:`file_stats`.
-
-    ``shuffle=False`` (default) uses ``coalesce`` — zero shuffle, but
-    the scan itself runs with only ``n_out`` tasks, so for a compaction
-    whose INPUT is huge relative to the cluster pass ``shuffle=True``
-    (full-parallel read, one exchange) instead. ``partition_by``
-    re-applies hive-style partitioning on the rewrite, clustering rows
-    so each output partition dir gets ~one file.
-
-    The swap is two directory renames (old → ``.__replaced__``,
-    tmp → live). On HDFS/local each rename is atomic but the pair is
-    not: a reader can observe a missing directory for the instant
-    between them, and on object stores rename itself is a copy. That
-    is the documented limit of IN-PLACE raw-parquet layout management —
-    :func:`compact_table` closes the window entirely with the repo's
-    marker-last generation protocol (readers resolve through
-    :func:`read_table`), and a production 100 TB deployment can put a
-    transactional table format (Delta/Iceberg — an atomic metadata
-    swap) over the same mechanics; both keep the engine
-    dependency-free. Use this in-place variant only when readers must
-    keep scanning the bare ``path``.
-    ``verify=True`` counts the rewrite before the swap (one extra
-    metadata-only pass over the tmp dir's footers) and aborts on any
-    mismatch, leaving the live dir untouched.
-    """
-    before = file_stats(spark, path, target_file_bytes)
-    if before["n_files"] == 0:
-        raise ValueError(f"compact_small_files: no data files under {path!r}")
-    n_out = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
-    df = spark.read.parquet(path)
-    base = path.rstrip("/")
-    tmp, old = base + ".__compacting__", base + ".__replaced__"
-    fsutil.delete(spark, tmp)
-    fsutil.delete(spark, old)
-    if partition_by:
-        # cluster rows by partition key so each partition dir gets ~one
-        # file per coalesced task instead of n_out × n_partitions shards
-        out = df.repartition(n_out, *partition_by)
-    else:
-        out = df.repartition(n_out) if shuffle else df.coalesce(n_out)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    if verify:
-        n0 = df.count()
-        n1 = spark.read.parquet(tmp).count()
-        if n0 != n1:
-            fsutil.delete(spark, tmp)
-            raise RuntimeError(
-                f"compact_small_files: rewrite row count {n1} != source {n0};"
-                f" {path!r} left untouched"
-            )
-    if not fsutil.rename(spark, path, old):
-        fsutil.delete(spark, tmp)
-        raise RuntimeError(f"compact_small_files: could not move {path!r} aside")
-    if not fsutil.rename(spark, tmp, path):
-        fsutil.rename(spark, old, path)  # roll back
-        fsutil.delete(spark, tmp)
-        raise RuntimeError(f"compact_small_files: swap failed; {path!r} restored")
-    fsutil.delete(spark, old)
-    return {"before": before, "after": file_stats(spark, path, target_file_bytes)}
-
 
 def write_clustered(
     df: DataFrame,
@@ -458,11 +358,8 @@ def _query_bound(val, side: str, dtype: str | None, session_tz: str | None):
     ``timestamp_ntz`` columns — whose residual comparison casts
     through the SESSION zone — the candidate set additionally covers
     the wall-as-UTC write convention and the session-zone reading, so
-    the prune stays conservative under every interpretation. Against
-    a pre-v2 manifest (no recorded type) a naive datetime falls back
-    to the legacy ISO comparison and an aware one returns ``None`` ⇒
-    keep — the tz-mismatched lexicographic compare was the one
-    non-conservative path (ADVICE r10)."""
+    the prune stays conservative under every interpretation. A
+    datetime against a non-timestamp column returns ``None`` ⇒ keep."""
     import datetime as _dt
 
     if isinstance(val, _dt.datetime):
@@ -515,9 +412,7 @@ def _query_bound(val, side: str, dtype: str | None, session_tz: str | None):
                         for f in (0, 1)
                     ]
             return min(cands) if side == "min" else max(cands)
-        if dtype is None and val.tzinfo is None:
-            return val.isoformat()  # legacy v1 naive-ISO spans
-        return None  # aware-vs-legacy or datetime on a non-ts column
+        return None
     return _json_bound(val, side, dtype)
 
 
@@ -824,7 +719,7 @@ def _footer_extract_fn(cols: list[str], types: dict[str, str], session_tz):
     return extract
 
 
-def _footer_file_stats(
+def _footer_stats_frame(
     spark: SparkSession,
     data_path: str,
     listed: list[tuple[str, int]],
@@ -960,7 +855,7 @@ def _write_manifest(
     listed = fsutil.list_files(spark, data_path)
     n_files = len(listed)
     if stats_source == "footer":
-        per_file = _footer_file_stats(spark, data_path, listed, cols, types)
+        per_file = _footer_stats_frame(spark, data_path, listed, cols, types)
     elif stats_source == "scan":
         per_file = (
             df.groupBy(F.input_file_name().alias("_uri"))
@@ -1193,11 +1088,10 @@ def _write_manifest_blooms(
     cols: list[str],
     fpp: float,
     manifest: dict,
-    table: str = _BLOOM_TABLE,
 ) -> dict:
-    """Build and write a generation's bloom sidecar under ``table``
-    (``_MANIFEST_BLOOM`` by default); returns the root-manifest
-    ``blooms`` entry ``{col: {m, k, fpp, dtype, table}}``. Costs one
+    """Build and write a generation's ``_MANIFEST_BLOOM`` sidecar;
+    returns the root-manifest ``blooms`` entry
+    ``{col: {m, k, fpp, dtype}}``. Costs one
     COLUMN-PRUNED scan of the bloomed columns — unlike min/max spans,
     membership cannot come from parquet footers, so this is an
     explicit opt-in priced at O(bloomed-column bytes), not O(table).
@@ -1249,74 +1143,9 @@ def _write_manifest_blooms(
         .repartition(n_out, "col")
         .sortWithinPartitions("col", "dir", "file")
         .write.mode("overwrite")
-        .parquet(f"{gen_dir}/{table}")
+        .parquet(f"{gen_dir}/{_BLOOM_TABLE}")
     )
-    return {
-        c: {
-            "m": m,
-            "k": k,
-            "fpp": fpp,
-            "dtype": types[c],
-            "table": table,
-        }
-        for c in cols
-    }
-
-
-def add_manifest_blooms(
-    spark: SparkSession,
-    root: str,
-    cols: list[str],
-    generation: str | None = None,
-    fpp: float = 0.01,
-) -> dict:
-    """Retrofit bloom filters onto a COMMITTED generation (current by
-    default): writes the ``_MANIFEST_BLOOM`` sidecar, then re-writes
-    the root ``_MANIFEST`` with the ``blooms`` entry — readers racing
-    the retrofit see either the old manifest (no blooms: span-only
-    prune, conservative) or the new one with its sidecar already on
-    disk. Requires the generation to carry a manifest. Prefer
-    ``write_table(bloom_cols=)`` for new generations — there the
-    sidecar lands before ``_COMPLETE`` and is covered by the same
-    commit point.
-
-    Repeated retrofits compose: each call writes its sidecar to a
-    FRESH table name (``_MANIFEST_BLOOM``, ``_MANIFEST_BLOOM_1``, …)
-    rather than overwriting — the per-column ``table`` pointer in the
-    manifest routes each column's reads to its own sidecar, so a
-    second retrofit for a different column cannot delete the first
-    column's bitsets out from under a manifest that still advertises
-    them (reads would stay CORRECT — a missing sidecar conservatively
-    keeps files — but the first column would silently lose all its
-    point-lookup pruning)."""
-    import json
-
-    gen = (
-        f"{root}/{generation}"
-        if generation is not None
-        else _resolve_table_generation(spark, root)
-    )
-    if gen is None or not fsutil.exists(spark, f"{gen}/_COMPLETE"):
-        raise ValueError(f"no committed generation to bloom under {root!r}")
-    name = gen.rsplit("/", 1)[-1]
-    manifest = read_manifest(spark, root, generation=name)
-    if manifest is None:
-        raise ValueError(
-            "bloom filters hang off the _MANIFEST; this generation was"
-            " written with manifest=False"
-        )
-    existing = manifest.get("blooms") or {}
-    used = {e["table"] for e in existing.values()}
-    table, n = _BLOOM_TABLE, 0
-    while table in used:
-        n += 1
-        table = f"{_BLOOM_TABLE}_{n}"
-    blooms = _write_manifest_blooms(
-        spark, gen, list(cols), fpp, manifest, table=table
-    )
-    manifest["blooms"] = {**existing, **blooms}
-    fsutil.write_text(spark, f"{gen}/_MANIFEST", json.dumps(manifest))
-    return manifest["blooms"]
+    return {c: {"m": m, "k": k, "fpp": fpp, "dtype": types[c]} for c in cols}
 
 
 def _bloom_pred_masks(preds: list[tuple], manifest: dict) -> list[tuple]:
@@ -1366,42 +1195,33 @@ def _bloom_excluded(
     preds: list[tuple],
     cache: dict | None = None,
 ) -> DataFrame | None:
-    """The ``(dir, file)`` frame of files a manifest bloom PROVABLY
-    excludes for ``preds``, or ``None`` when no predicate is bloom-
-    evaluable (or the sidecar is unreadable — conservative keep). The
-    job scans only the sidecar (KBs per file), never data. With an
-    :func:`open_table` ``cache``, each sidecar frame is Spark-cached
-    on first use so repeated point lookups re-scan memory, not
-    files."""
+    """The ``(dir, file)`` frame of files the ``_MANIFEST_BLOOM``
+    sidecar PROVABLY excludes for ``preds``, or ``None`` when no
+    predicate is bloom-evaluable (or the sidecar is unreadable —
+    conservative keep). The job scans only the sidecar (KBs per file),
+    never data. With an :func:`open_table` ``cache``, the sidecar frame
+    is Spark-cached on first use so repeated point lookups re-scan
+    memory, not files."""
     from functools import reduce
     from operator import or_
 
     marked = _bloom_pred_masks(preds, manifest)
     if not marked:
         return None
-    tables = {manifest["blooms"][c]["table"] for c, _ in marked}
-    frames = []
-    for t in sorted(tables):
-        try:
-            if cache is not None:
-                key = ("bloom", gen_dir, t)
-                if key not in cache["bloom_frames"]:
-                    cache["bloom_frames"][key] = spark.read.parquet(
-                        f"{gen_dir}/{t}"
-                    ).cache()
-                b = cache["bloom_frames"][key]
-            else:
-                b = spark.read.parquet(f"{gen_dir}/{t}")
-        except Exception:  # noqa: BLE001 - sidecar gone: keep all
-            return None
-        conds = [
-            _bloom_fail_cond(c, mv)
-            for c, mv in marked
-            if manifest["blooms"][c]["table"] == t
-        ]
-        frames.append(b.filter(reduce(or_, conds)).select("dir", "file"))
-    out = reduce(lambda a, x: a.unionByName(x), frames)
-    return out.distinct()
+    try:
+        if cache is not None:
+            key = ("bloom", gen_dir)
+            if key not in cache["bloom_frames"]:
+                cache["bloom_frames"][key] = spark.read.parquet(
+                    f"{gen_dir}/{_BLOOM_TABLE}"
+                ).cache()
+            b = cache["bloom_frames"][key]
+        else:
+            b = spark.read.parquet(f"{gen_dir}/{_BLOOM_TABLE}")
+    except Exception:  # noqa: BLE001 - sidecar gone: keep all
+        return None
+    conds = [_bloom_fail_cond(c, mv) for c, mv in marked]
+    return b.filter(reduce(or_, conds)).select("dir", "file").distinct()
 
 
 def read_manifest(
@@ -1488,7 +1308,7 @@ def prune_manifest_files(
     """The INLINE manifest files that MAY contain rows matching
     ``where`` — a list of ``(col, op, value)`` conjuncts (or one such
     tuple). Driver-side and conservative (see :func:`_span_may_match`).
-    Timestamp predicates on a v2 manifest compare as UTC epoch micros:
+    Timestamp predicates compare as UTC epoch micros:
     pass the Spark session timezone as ``session_tz`` so NAIVE
     datetime values localize the way the residual ``F.lit`` will
     (:func:`read_table` does); without it naive values conservatively
@@ -1501,7 +1321,7 @@ def prune_manifest_files(
             "manifest stores its file entries in the _MANIFEST_FILES"
             " sidecar (files_table); prune via read_table(where=)"
         )
-    types = manifest.get("types") or {}
+    types = manifest["types"]
     return [
         f["file"]
         for f in manifest["files"]
@@ -1567,7 +1387,7 @@ def _prune_plan(
     <file count the union covers>}``; empty dirs+files means provably
     no match."""
     preds = _check_prune_preds(where)
-    types = manifest.get("types") or {}
+    types = manifest["types"]
 
     def keep(stats: dict) -> bool:
         return all(
@@ -1575,15 +1395,7 @@ def _prune_plan(
             for c, op, v in preds
         )
 
-    dirs = manifest.get("dirs")
-    if dirs is None:  # v1 manifest: inline files only, no dir level
-        kept = prune_manifest_files(manifest, where, session_tz=session_tz)
-        return {
-            "all": len(kept) == len(manifest["files"]),
-            "dirs": [],
-            "files": kept,
-            "kept_files": len(kept),
-        }
+    dirs = manifest["dirs"]
     kept_dirs = [d for d in dirs if keep(d["stats"])]
     if not kept_dirs:
         return {"all": False, "dirs": [], "files": [], "kept_files": 0}
@@ -1658,7 +1470,7 @@ def _prune_plan(
         kept_files += sum(nf[d] for d in promoted) - len(files)
         whole, files = sorted(set(whole) | set(promoted)), []
     return {
-        "all": kept_files >= manifest.get("n_files", float("inf")),
+        "all": kept_files >= manifest["n_files"],
         "dirs": whole,
         "files": files,
         "kept_files": kept_files,
@@ -1897,8 +1709,9 @@ def _read_generation_pruned(
                     spark, root, m, where, cache=cache
                 )
             elif missing == [_LINEAGE_COL]:
-                # _lineage on a pre-lineage parent a delta chained onto:
-                # stamp the legacy lineage first, then the residual filter
+                # _lineage on a write_table-seeded parent a delta chained
+                # onto: stamp the legacy lineage first, then the residual
+                # filter
                 p = spark.read.parquet(f"{m}/data")
                 p = p.withColumn(_LINEAGE_COL, F.lit(_LEGACY_LINEAGE))
                 frame = p.filter(_where_column(where))
@@ -1932,7 +1745,7 @@ def _read_generation_pruned(
             tomb_accum = (
                 keys if tomb_accum is None else tomb_accum.unionByName(keys)
             )
-    # a delta chained onto a pre-lineage parent: the parent's rows ARE
+    # a delta chained onto a parent without _lineage: its rows ARE
     # the legacy lineage (the _ingest_frames stamp, one level down);
     # any other schema asymmetry across deltas unions as nulls
     if any(_LINEAGE_COL in p.columns for p in parts):
@@ -2158,9 +1971,7 @@ def write_table(
     the same ``_COMPLETE`` commit point as the manifest. The data
     write also enables parquet-NATIVE blooms (adaptive-sized) on the
     same columns, so pushed equality filters row-group-skip INSIDE
-    the files the manifest bloom decides to open. Retrofit onto an
-    existing generation with :func:`add_manifest_blooms` (manifest
-    sidecar only — native blooms exist only when written).
+    the files the manifest bloom decides to open.
 
     ``tombstones`` + ``tombstone_col`` attach a row-level DELETE set to
     the generation: the distinct non-null values of ``tombstone_col``
@@ -2267,6 +2078,23 @@ def _commit_marker(spark: SparkSession, root: str, name: str) -> None:
             raise  # genuine I/O failure: nothing is committed
 
 
+def _census(
+    spark: SparkSession, gen_dirs: list[str], target_file_bytes: int
+) -> dict:
+    """Leaf-file census of generation dirs' data — one recursive LIST
+    each, no data bytes read: the numbers that decide whether a
+    compaction is worth a rewrite (a file under half the target is
+    "small")."""
+    sizes = [
+        sz for g in gen_dirs for _, sz in fsutil.list_files(spark, f"{g}/data")
+    ]
+    return {
+        "n_files": len(sizes),
+        "total_bytes": sum(sizes),
+        "n_small_files": sum(1 for sz in sizes if sz < target_file_bytes / 2),
+    }
+
+
 def compact_table(
     spark: SparkSession,
     root: str,
@@ -2280,16 +2108,15 @@ def compact_table(
     bloom_cols: list[str] | str | None = "inherit",
     bloom_fpp: float = 0.01,
 ) -> dict:
-    """:func:`compact_small_files` without the rename window: rewrite
+    """Small-file compaction without a rename window: rewrite
     the CURRENT generation of the table at ``root`` into
     ~``target_file_bytes`` files as a NEW generation and commit it
     marker-last (:func:`write_table`). Readers resolving through
     :func:`read_table` never observe a missing or half-swapped
     directory — they see the old generation until the single marker
     write lands, then the new one; a concurrent compactor writes its
-    own generation and the last marker wins (both are complete). This
-    is the at-rest answer to the documented swap window of the in-place
-    variant; superseded generations stay on disk until
+    own generation and the last marker wins (both are complete).
+    Superseded generations stay on disk until
     :func:`gc_table_generations` (size its age threshold past reader
     lifetimes — same TOCTOU note as ``ensure_ivf_index``).
 
@@ -2302,7 +2129,7 @@ def compact_table(
     here for multi-column filter sets. Mutually exclusive with
     ``partition_by``.
 
-    Returns before/after :func:`file_stats` plus the new generation
+    Returns before/after :func:`_census` plus the new generation
     name and ``committed`` (False when the source generation was
     superseded mid-rewrite — e.g. a concurrent :func:`absorb_landing`
     committed new batches — or the marker write lost a race: the
@@ -2316,13 +2143,7 @@ def compact_table(
     cur = current_table_path(spark, root)
     gen_head = cur[: -len("/data")]
     chain = _gen_chain(spark, root, gen_head)
-    before = file_stats(spark, cur, target_file_bytes)
-    for member in chain[1:]:  # fold the delta chain's census in
-        m = file_stats(spark, f"{member}/data", target_file_bytes)
-        for key in (
-            "n_files", "total_bytes", "n_small_files",
-        ):
-            before[key] += m[key]
+    before = _census(spark, chain, target_file_bytes)
     if before["n_files"] == 0:
         raise ValueError(f"compact_table: no data files under {cur!r}")
     n_out = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
@@ -2398,8 +2219,7 @@ def compact_table(
     # generation must not forget which landing batches were absorbed —
     # a straggling/replayed landing partition of an absorbed batch
     # would otherwise be read TWICE by read_ingest_table
-    gen_dir = cur[: -len("/data")]
-    ledger = fsutil.try_read_text(spark, f"{gen_dir}/_ABSORBED")
+    ledger = fsutil.try_read_text(spark, f"{gen_head}/_ABSORBED")
     if ledger:
         fsutil.write_text(spark, f"{base}/_ABSORBED", ledger)
     fsutil.write_text(spark, f"{base}/_COMPLETE", "")
@@ -2414,12 +2234,12 @@ def compact_table(
     # landing INSIDE the check-to-flip window remains possible
     # (DEPLOYMENT.md: serialize absorb/compact per root), but the
     # window shrinks from the whole rewrite to one marker write.
-    src_name = gen_dir.rsplit("/", 1)[-1]
+    src_name = gen_head.rsplit("/", 1)[-1]
     now_gen = _resolve_table_generation(spark, root)
     if now_gen is None or now_gen.rsplit("/", 1)[-1] != src_name:
         return {
             "before": before,
-            "after": file_stats(spark, f"{base}/data", target_file_bytes),
+            "after": _census(spark, [base], target_file_bytes),
             "generation": name,
             "committed": False,
             "reason": "source generation superseded mid-rewrite;"
@@ -2433,7 +2253,7 @@ def compact_table(
     gen_after = _resolve_table_generation(spark, root)
     return {
         "before": before,
-        "after": file_stats(spark, f"{base}/data", target_file_bytes),
+        "after": _census(spark, [base], target_file_bytes),
         "generation": name,
         "links_folded": len(chain),
         "committed": gen_after is not None
@@ -2451,8 +2271,8 @@ def maybe_compact_table(
     **compact_kwargs,
 ) -> dict:
     """The maintenance-loop form of :func:`compact_table`: census the
-    CURRENT generation chain (:func:`file_stats` per member — one
-    recursive LIST each, no data bytes) and rewrite only when
+    CURRENT generation chain (:func:`_census` — one recursive LIST per
+    member, no data bytes) and rewrite only when
     fragmentation crosses the thresholds (at least ``min_small_files``
     undersized files AND they are at least ``min_small_fraction`` of
     all files) OR the incremental-absorb ``_PARENT`` chain has grown
@@ -2465,11 +2285,7 @@ def maybe_compact_table(
     :func:`compact_table`'s report plus ``"compacted": True``."""
     head = current_table_path(spark, root)[: -len("/data")]
     chain = _gen_chain(spark, root, head)
-    census = file_stats(spark, f"{chain[0]}/data", target_file_bytes)
-    for member in chain[1:]:
-        m = file_stats(spark, f"{member}/data", target_file_bytes)
-        for key in ("n_files", "total_bytes", "n_small_files"):
-            census[key] += m[key]
+    census = _census(spark, chain, target_file_bytes)
     census["chain_links"] = len(chain)
     small = census["n_small_files"]
     fragmented = small >= min_small_files and small >= min_small_fraction * max(
@@ -2632,16 +2448,17 @@ def clustering_stats(path: str, column: str) -> dict:
 _LINEAGE_COL = "_lineage"
 _BATCH_COL = "_batch_id"
 
-#: the lineage name pre-lineage layouts (bare ``_batch_id=`` dirs, a
-#: bare-list ledger) migrate onto — RESERVED: a live stream landing
-#: under it would collide with that migrated history
+#: the lineage stamped on rows of a generation that has no ``_lineage``
+#: column (a table seeded with :func:`write_table` and then fed by
+#: incremental absorbs) — RESERVED: a live stream landing under it
+#: would collide with those rows
 _LEGACY_LINEAGE = "legacy"
 
 
 def _check_lineage(lineage: str) -> str:
     """'%' is rejected alongside '/' and '=': hive-escaped partition
     dirs percent-encode special characters (lineage 'pt:BR' lands under
-    ``_lineage=pt%3ABR``), and :func:`_landing_batch_dirs` percent-
+    ``_lineage=pt%3ABR``), and :func:`_landing_batches` percent-
     DECODES the dir back so ledger keys always equal the raw lineage
     string users filter the ``_lineage`` column on (ADVICE r10); a raw
     '%' would make that decoding ambiguous ('pt%3A' and 'pt:' collide)."""
@@ -2652,8 +2469,8 @@ def _check_lineage(lineage: str) -> str:
     ):
         raise ValueError(
             f"invalid ingest lineage {lineage!r}: must be non-empty,"
-            f" not the reserved {_LEGACY_LINEAGE!r} (pre-lineage history"
-            " migrates onto it), and free of '/', '=' and '%'"
+            f" not the reserved {_LEGACY_LINEAGE!r} (rows of a generation"
+            " without _lineage read under it), and free of '/', '=' and '%'"
         )
     return lineage
 
@@ -2723,27 +2540,17 @@ def _absorbed_ids(
     ``[lo, hi]`` inclusive ranges (batch ids are near-contiguous, so
     the range form keeps the ledger O(gaps) — a years-long ingest
     stays a handful of ranges per lineage, not one int per micro-batch
-    ever absorbed). A pre-lineage ledger (bare JSON list) decodes as
-    the reserved legacy lineage. Keys percent-DECODE on read: ledgers
-    written before r11 keyed the hive-ESCAPED lineage dir name
-    ('pt%3ABR'), newer ones the raw string ('pt:BR') — unquote maps
-    both onto the raw form, unambiguously because raw '%' has never
-    been a legal lineage character at append time."""
+    ever absorbed). Keys are raw lineage strings."""
     import json
-    from urllib.parse import unquote
 
     if gen_dir is None:
         return {}
     text = fsutil.try_read_text(spark, f"{gen_dir}/_ABSORBED")
     if not text:
         return {}
-    doc = json.loads(text)
-    if isinstance(doc, list):  # pre-lineage ledger
-        return {_LEGACY_LINEAGE: _decode_ranges(doc)}
-    out: dict[str, set[int]] = {}
-    for lin, items in doc.items():
-        out.setdefault(unquote(lin), set()).update(_decode_ranges(items))
-    return out
+    return {
+        lin: _decode_ranges(items) for lin, items in json.loads(text).items()
+    }
 
 
 def _encode_ranges(ids: set[int]) -> list:
@@ -2775,29 +2582,34 @@ def _covers(
     return all(b in ledger.get(lin, ()) for lin, b in pending)
 
 
+def _landing_batches(
+    spark: SparkSession, root: str
+) -> list[tuple[str, int, str, int]]:
+    """``(lineage, batch_id, landing-relative dir, mtime_ms)`` of every
+    ``_lineage=*/_batch_id=*`` partition currently landed. The
+    hive-escaped dir value decodes to the RAW lineage string (what the
+    rows' ``_lineage`` column holds and what ledgers key on) —
+    unambiguous because :func:`_check_lineage` forbids raw '%'."""
+    from urllib.parse import unquote
+
+    landing = f"{root}/landing"
+    out = []
+    for name, _ in fsutil.list_dir(spark, landing):
+        if name.startswith(f"{_LINEAGE_COL}="):
+            lin = unquote(name.split("=", 1)[1])
+            for sub, mtime in fsutil.list_dir(spark, f"{landing}/{name}"):
+                if sub.startswith(f"{_BATCH_COL}="):
+                    b = int(sub.split("=", 1)[1])
+                    out.append((lin, b, f"{name}/{sub}", mtime))
+    return out
+
+
 def _landing_batch_dirs(
     spark: SparkSession, root: str
 ) -> dict[tuple[str, int], str]:
     """(lineage, batch_id) → landing-relative partition dir currently
-    present. Pre-lineage layouts (bare ``_batch_id=`` dirs at the
-    landing root) enumerate under the reserved legacy lineage, so a
-    root written by an older engine keeps reading and absorbing."""
-    from urllib.parse import unquote
-
-    landing = f"{root}/landing"
-    out: dict[tuple[str, int], str] = {}
-    for name, _ in fsutil.list_dir(spark, landing):
-        if name.startswith(f"{_BATCH_COL}="):  # pre-lineage layout
-            out[(_LEGACY_LINEAGE, int(name.split("=", 1)[1]))] = name
-        elif name.startswith(f"{_LINEAGE_COL}="):
-            # hive-escaped dir value → the RAW lineage string (what the
-            # rows' _lineage column holds and what ledgers key on);
-            # unambiguous because _check_lineage forbids raw '%'
-            lin = unquote(name.split("=", 1)[1])
-            for sub, _m in fsutil.list_dir(spark, f"{landing}/{name}"):
-                if sub.startswith(f"{_BATCH_COL}="):
-                    out[(lin, int(sub.split("=", 1)[1]))] = f"{name}/{sub}"
-    return out
+    present."""
+    return {(lin, b): d for lin, b, d, _ in _landing_batches(spark, root)}
 
 
 def _ingest_pending(
@@ -2829,11 +2641,8 @@ def _ingest_frames(
     where=None,
 ) -> list[DataFrame]:
     """The frames an ingest view unions: the generation's data (rows
-    written pre-lineage gain the legacy ``_lineage``) and the pending
-    landing partitions — lineage-layout dirs in one basePath read,
-    pre-lineage bare ``_batch_id=`` dirs (which carry no lineage
-    partition dir) in another with the legacy lineage stamped on.
-    ``where`` makes every leg carry the residual filter and the
+    of a generation without ``_lineage`` gain the legacy lineage) and
+    the pending landing partitions in one basePath read. ``where`` makes every leg carry the residual filter and the
     GENERATION leg manifest-pruned (the leg with 10^5-file scale;
     landing holds at most the batches since the last absorb)."""
     landing = f"{root}/landing"
@@ -2858,7 +2667,7 @@ def _ingest_frames(
         if where is not None and not missing:
             g = _read_generation_pruned(spark, root, gen, where)
         elif where is not None and missing == [_LINEAGE_COL]:
-            # _lineage on a legacy generation: stamp it, filter unpruned
+            # _lineage on a generation without it: stamp, filter unpruned
             g = _read_generation_pruned(spark, root, gen, None)
             if _LINEAGE_COL not in g.columns:
                 g = g.withColumn(_LINEAGE_COL, F.lit(_LEGACY_LINEAGE))
@@ -2870,8 +2679,7 @@ def _ingest_frames(
         if _LINEAGE_COL not in g.columns:
             g = g.withColumn(_LINEAGE_COL, F.lit(_LEGACY_LINEAGE))
         parts.append(g)
-    lineage_dirs = sorted(d for d in pending.values() if "/" in d)
-    legacy_dirs = sorted(d for d in pending.values() if "/" not in d)
+    lineage_dirs = sorted(pending.values())
     if lineage_dirs:
         # per-batch landing prune (VERDICT r10 #5): each pending batch
         # dir carries its own footer-harvested _MANIFEST — a selective
@@ -2916,13 +2724,6 @@ def _ingest_frames(
                 f"{landing}/{lineage_dirs[0]}"
             )
             parts.append(frame.filter(F.lit(False)))
-    if legacy_dirs:
-        frame = (
-            spark.read.option("basePath", landing)
-            .parquet(*[f"{landing}/{d}" for d in legacy_dirs])
-            .withColumn(_LINEAGE_COL, F.lit(_LEGACY_LINEAGE))
-        )
-        parts.append(residual(frame))
     return parts
 
 
@@ -2941,8 +2742,8 @@ def read_ingest_table(
     root stay disjoint. Batch-only consumers that want a STABLE
     snapshot keep using :func:`read_table` (data as of the last
     absorb). Rows carry the ``_lineage`` and ``_batch_id`` columns;
-    pre-lineage rows and landing dirs read under the reserved legacy
-    lineage.
+    rows of a generation without ``_lineage`` (seeded by
+    :func:`write_table`) read under the reserved legacy lineage.
 
     ``where`` (the :func:`read_table` predicate spec) makes the
     GENERATION leg manifest-pruned — when ``absorb_landing`` wrote a
@@ -3190,23 +2991,10 @@ def gc_landing(
     import time
 
     now = int(time.time() * 1000) if now_ms is None else now_ms
-    gen = _resolve_table_generation(spark, root)
-    absorbed = _absorbed_ids(spark, gen)
-    landing = f"{root}/landing"
+    absorbed = _absorbed_ids(spark, _resolve_table_generation(spark, root))
     deleted: list[str] = []
-
-    def sweep(lin: str, rel: str, mtime: int) -> None:
-        b = int(rel.rsplit("=", 1)[1])
+    for lin, b, rel, mtime in _landing_batches(spark, root):
         if b in absorbed.get(lin, ()) and now - mtime > max_age_ms:
-            fsutil.delete(spark, f"{landing}/{rel}")
+            fsutil.delete(spark, f"{root}/landing/{rel}")
             deleted.append(rel)
-
-    for d, mtime in fsutil.list_dir(spark, landing):
-        if d.startswith(f"{_BATCH_COL}="):  # pre-lineage layout
-            sweep(_LEGACY_LINEAGE, d, mtime)
-        elif d.startswith(f"{_LINEAGE_COL}="):
-            lin = d.split("=", 1)[1]
-            for sub, m in fsutil.list_dir(spark, f"{landing}/{d}"):
-                if sub.startswith(f"{_BATCH_COL}="):
-                    sweep(lin, f"{d}/{sub}", m)
     return sorted(deleted)

@@ -522,9 +522,8 @@ def refresh_bm25_stats(spark, root: str) -> tuple[int, float]:
     ``absorb_landing``, which doesn't know the table is a text index).
     Recomputes ``(n_docs, avgdl)`` over the live table (full chain) in
     one aggregate job and writes the sidecar into the resolved
-    generation dir. Post-commit retrofit, same model as
-    ``layout.add_manifest_blooms``: concurrent readers see either no
-    sidecar (they fall back to the recompute) or the complete tiny
+    generation dir. Post-commit retrofit: concurrent readers see either
+    no sidecar (they fall back to the recompute) or the complete tiny
     object — :func:`read_bm25_stats` treats a torn read as absence.
     Returns the stats it landed. Schedule next to
     ``maybe_compact_table`` in the index-maintenance loop."""

@@ -27,10 +27,8 @@ from big_data___knowledge_graph_construction_with_llm_spark.schemas import DEFAU
 
 Extractor = Callable[[str], list[dict]]
 
-TRIPLET_DDL = (
-    "subject string, subject_type string, relation string, "
-    "object string, object_type string"
-)
+TRIPLET_COLS = ["subject", "subject_type", "relation", "object", "object_type"]
+TRIPLET_DDL = ", ".join(f"{c} string" for c in TRIPLET_COLS)
 
 
 def mock_extractor(record_json: str) -> list[dict]:
@@ -60,34 +58,44 @@ def mock_extractor(record_json: str) -> list[dict]:
     return out
 
 
-def extract_triplets(
+def _extract(
     records: DataFrame,
-    extractor: Extractor = mock_extractor,
-    fanout_partitions: int | None = None,
+    fanout_partitions: int | None,
+    batch_rows: Callable[[list[str]], list[dict]],
 ) -> DataFrame:
-    """records (any schema) → typed triplets via the pluggable extractor.
-
-    Rows are serialized to JSON JVM-side (``to_json(struct(*))``), then an
-    Arrow-batched ``mapInPandas`` calls the extractor per record. Partition
-    count = external-call fan-out (the engine's version of the reference's
-    batch-size knobs, SURVEY.md §4).
-    """
+    """The one extraction body: rows are serialized to JSON JVM-side
+    (``to_json(struct(*))``), optionally repartitioned (partition count
+    = external-call fan-out, SURVEY.md §4), then an Arrow-batched
+    ``mapInPandas`` turns each batch's record JSONs into triplet dicts
+    with ``batch_rows``."""
     payload = records.select(F.to_json(F.struct(*records.columns)).alias("js"))
     if fanout_partitions:
         payload = payload.repartition(fanout_partitions)
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["subject", "subject_type", "relation", "object", "object_type"]
         for pdf in batches:
-            rows: list[dict] = []
-            for js in pdf["js"]:
-                rows.extend(extractor(js))
-            out = pd.DataFrame(rows, columns=cols) if rows else pd.DataFrame(
-                {c: pd.Series(dtype="object") for c in cols}
+            rows = batch_rows([str(t) for t in pdf["js"]])
+            yield pd.DataFrame(
+                [{c: r.get(c) for c in TRIPLET_COLS} for r in rows],
+                columns=TRIPLET_COLS,
+                dtype="object",
             )
-            yield out
 
     return payload.mapInPandas(_run, schema=TRIPLET_DDL)
+
+
+def extract_triplets(
+    records: DataFrame,
+    extractor: Extractor = mock_extractor,
+    fanout_partitions: int | None = None,
+) -> DataFrame:
+    """records (any schema) → typed triplets via the pluggable extractor,
+    called once per record inside the Arrow-batched ``mapInPandas``."""
+    return _extract(
+        records,
+        fanout_partitions,
+        lambda texts: [t for js in texts for t in extractor(js)],
+    )
 
 
 def extract_triplets_async(
@@ -117,30 +125,15 @@ def extract_triplets_async(
         scrape_json_objects,
     )
 
-    payload = records.select(F.to_json(F.struct(*records.columns)).alias("js"))
-    if fanout_partitions:
-        payload = payload.repartition(fanout_partitions)
-    cols = ["subject", "subject_type", "relation", "object", "object_type"]
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def batch_rows(texts: list[str]) -> list[dict]:
         import asyncio
 
-        for pdf in batches:
-            texts = [str(t) for t in pdf["js"]]
-            replies = asyncio.run(
-                gather_in_batches(texts, async_call, batch_size, **retry_kwargs)
-            )
-            rows: list[dict] = []
-            for reply in replies:
-                for obj in scrape_json_objects(reply):
-                    rows.append({c: obj.get(c) for c in cols})
-            yield (
-                pd.DataFrame(rows, columns=cols)
-                if rows
-                else pd.DataFrame({c: pd.Series(dtype="object") for c in cols})
-            )
+        replies = asyncio.run(
+            gather_in_batches(texts, async_call, batch_size, **retry_kwargs)
+        )
+        return [obj for reply in replies for obj in scrape_json_objects(reply)]
 
-    return payload.mapInPandas(_run, schema=TRIPLET_DDL)
+    return _extract(records, fanout_partitions, batch_rows)
 
 
 def validate_triplets(raw: DataFrame) -> DataFrame:

@@ -844,9 +844,11 @@ def q_approx_sketches(spark: SparkSession, sf: str) -> DataFrame:
     co-resident sketch/sort buffer through 2× the rows — measured 8.3s
     mixed vs ~1.3s split at sf0.1 in r14; the r14 shape still paired
     ``countDistinct`` with the exact ``percentile``, so THAT leg's
-    sort buffer paid the 2× Expand (the q_order_stats pathology; A/B
-    in OPTIMIZATION_r15.md). At 100 TB only
-    the sketch aggregate runs; the exact twin exists to grade it."""
+    sort buffer paid the 2× Expand (the q_order_stats pathology).
+    Because the exact percentiles share the sketch aggregate, this
+    query is NOT itself bounded-memory: it carries the exact values to
+    grade the sketches. A 100 TB job would keep only the two sketch
+    expressions."""
     o = load(spark, sf, "orders")
     # one sketch buffer / one sort buffer for BOTH percentiles (the
     # array form), not one per quantile; exact percentiles ride the

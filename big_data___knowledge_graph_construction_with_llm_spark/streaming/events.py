@@ -235,10 +235,9 @@ def incremental_dedup_sink(
     batches into a marker-committed generation (``store_path/gen-*``
     + ``_CURRENT`` — ``operators.layout`` protocol), so the store
     never accumulates one file per micro-batch forever. Every store
-    read here unions the committed generation (if any), the landing
-    area, and — for stores written by pre-generational versions —
-    legacy flat partitions at the root, each under the same replay
-    prune (lineage/batch_id are physical columns in all three).
+    read here unions the committed generation (if any) and the landing
+    area under the same replay prune (lineage/batch_id are physical
+    columns in both).
 
     ``expectations`` (optional, :mod:`operators.validate` rules) is
     the per-micro-batch data gate: the one-scan :func:`validate`
@@ -337,19 +336,18 @@ def incremental_dedup_sink(
     return _sink
 
 
-def _legacy_partition_dirs(spark, store_path: str) -> list[str]:
-    """Flat ``lineage=*/batch_id=*`` partition dirs at the store ROOT —
-    the layout pre-generational writers used. Enumerated explicitly
-    (never a recursive read of the root, which also holds ``gen-*`` and
-    ``landing`` dirs that would wreck partition discovery)."""
+def _landing_partition_dirs(spark, landing: str) -> list[str]:
+    """The ``lineage=*/batch_id=*`` partition dirs under the store's
+    landing area, enumerated explicitly — the snapshot a compaction
+    absorbs."""
     from big_data___knowledge_graph_construction_with_llm_spark import fsutil
 
     out: list[str] = []
-    for lin, _ in fsutil.list_dir(spark, store_path):
+    for lin, _ in fsutil.list_dir(spark, landing):
         if lin.startswith("lineage="):
             out += [
                 f"{lin}/{b}"
-                for b, _ in fsutil.list_dir(spark, f"{store_path}/{lin}")
+                for b, _ in fsutil.list_dir(spark, f"{landing}/{lin}")
                 if b.startswith("batch_id=")
             ]
     return out
@@ -358,9 +356,8 @@ def _legacy_partition_dirs(spark, store_path: str) -> list[str]:
 def _store_read_frames(spark, store_path: str, store_schema) -> list:
     """The schema-pinned frames a fingerprint-store read unions: the
     committed generation (if a ``_CURRENT`` marker resolves, with
-    lineage/batch_id as physical columns), the landing area (partition
-    columns), and legacy pre-generational flat partitions at the root
-    (enumerated explicitly, read under ``basePath``).
+    lineage/batch_id as physical columns) and the landing area
+    (partition columns).
 
     The generation leg reads the full ``_PARENT`` CHAIN with tombstones
     applied (``layout._read_generation_pruned``): the store's own
@@ -400,13 +397,6 @@ def _store_read_frames(spark, store_path: str, store_schema) -> list:
     landing = _store_landing(store_path)
     if fsutil.exists(spark, landing):
         out.append(spark.read.schema(store_schema).parquet(landing))
-    legacy = _legacy_partition_dirs(spark, store_path)
-    if legacy:
-        out.append(
-            spark.read.schema(store_schema)
-            .option("basePath", store_path)
-            .parquet(*[f"{store_path}/{p}" for p in legacy])
-        )
     return out
 
 
@@ -416,8 +406,8 @@ def compact_fingerprint_store(
     min_batches: int = 8,
     target_file_bytes: int = 64 << 20,
 ) -> dict:
-    """Absorb landed micro-batch partitions (plus any legacy flat
-    partitions and the previously committed generation) into ONE new
+    """Absorb landed micro-batch partitions (plus the previously
+    committed generation) into ONE new
     marker-committed generation of the fingerprint store — the
     maintenance pass that keeps a forever-running ingest stream from
     drowning its own store in per-batch small files. Safe to run WHILE
@@ -452,14 +442,9 @@ def compact_fingerprint_store(
     )
 
     landing = _store_landing(store_path)
-    absorbed = _legacy_partition_dirs(spark, landing)  # snapshot, now
-    legacy = _legacy_partition_dirs(spark, store_path)
-    if len(absorbed) + len(legacy) < min_batches:
-        return {
-            "compacted": False,
-            "landing_batches": len(absorbed),
-            "legacy_batches": len(legacy),
-        }
+    absorbed = _landing_partition_dirs(spark, landing)  # snapshot, now
+    if len(absorbed) < min_batches:
+        return {"compacted": False, "landing_batches": len(absorbed)}
     gen = _resolve_table_generation(spark, store_path)
     parts = []
     if gen is not None:
@@ -474,12 +459,6 @@ def compact_fingerprint_store(
                 *[f"{landing}/{p}" for p in absorbed]
             )
         )
-    if legacy:
-        parts.append(
-            spark.read.option("basePath", store_path).parquet(
-                *[f"{store_path}/{p}" for p in legacy]
-            )
-        )
     merged = parts[0]
     for p in parts[1:]:
         merged = merged.unionByName(p)
@@ -487,8 +466,6 @@ def compact_fingerprint_store(
     if gen:
         for member in _gen_chain(spark, store_path, gen):
             census += fsutil.list_files(spark, f"{member}/data")
-    for p in legacy:
-        census += fsutil.list_files(spark, f"{store_path}/{p}")
     files_before = len(census)
     total_bytes = sum(sz for _, sz in census)
     n_out = max(1, -(-total_bytes // target_file_bytes))
@@ -510,8 +487,6 @@ def compact_fingerprint_store(
         raced = gen_now is not None and gen_now != gen
         gone = all(
             not fsutil.exists(spark, f"{landing}/{p}") for p in absorbed
-        ) and all(
-            not fsutil.exists(spark, f"{store_path}/{p}") for p in legacy
         )
         if raced and gone:
             return {
@@ -535,25 +510,16 @@ def compact_fingerprint_store(
             " a concurrent race); nothing deleted",
             "generation": name,
         }
+    # emptied landing lineage dirs stay: they are LIVE — a concurrent
+    # micro-batch can land between an emptiness check and a recursive
+    # delete, and deleting it would lose that batch's fingerprints
     for p in absorbed:
         fsutil.delete(spark, f"{landing}/{p}")
-    # empty-parent cleanup ONLY on the legacy ROOT side: the stream
-    # never writes new batches there, so an emptied lineage dir stays
-    # empty. Landing lineage dirs are LIVE — a concurrent micro-batch
-    # can land between our emptiness check and a recursive delete, and
-    # deleting it would lose that batch's fingerprints — so they stay.
-    parents = set()
-    for p in legacy:
-        fsutil.delete(spark, f"{store_path}/{p}")
-        parents.add(p.split("/", 1)[0])
-    for parent in parents:
-        if not fsutil.list_dir(spark, f"{store_path}/{parent}"):
-            fsutil.delete(spark, f"{store_path}/{parent}")
     new_data = f"{store_path}/{name}/data"
     return {
         "compacted": True,
         "generation": name,
-        "absorbed_batches": len(absorbed) + len(legacy),
+        "absorbed_batches": len(absorbed),
         "files_before": files_before,
         "files_after": len(fsutil.list_files(spark, new_data)),
     }

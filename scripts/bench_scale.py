@@ -305,10 +305,9 @@ def layout_experiment(spark, sf_dir: str) -> dict:
       through the order-preserving prefix key) — footer min/max on the
       string column itself must skip a string-range filter.
 
-    Plus one :func:`compact_small_files` run (64 shards → target-sized)
-    AND one marker-last :func:`compact_table` generation rewrite (the
-    rename-window-free variant), each with before/after file counts
-    and wall. All writes go to a scratch dir and are deleted;
+    Plus one marker-last :func:`compact_table` generation rewrite
+    (64 shards → target-sized) with before/after file counts and
+    wall. All writes go to a scratch dir and are deleted;
     decoded-rows ratios are scale-free, so the sf0.1 measurement is
     the design evidence, re-checked every bench run.
     """
@@ -319,7 +318,6 @@ def layout_experiment(spark, sf_dir: str) -> dict:
 
     from big_data___knowledge_graph_construction_with_llm_spark.operators.layout import (
         clustering_stats,
-        compact_small_files,
         decoded_scan_rows,
         with_zorder,
         write_clustered,
@@ -408,19 +406,8 @@ def layout_experiment(spark, sf_dir: str) -> dict:
             ),
         }
 
-        frag = f"{scratch}/frag"
-        li.repartition(64).write.parquet(frag)
-        t0 = time.perf_counter()
-        rep = compact_small_files(spark, frag, target_file_bytes=64 << 20)
-        res["compact"] = {
-            "files_before": rep["before"]["n_files"],
-            "files_after": rep["after"]["n_files"],
-            "total_mb": round(rep["before"]["total_bytes"] / 1e6, 1),
-            "wall_s": round(time.perf_counter() - t0, 2),
-        }
-
-        # marker-last generational rewrite: same compaction, no rename
-        # window (readers resolve the _CURRENT marker)
+        # marker-last generational small-file compaction (readers
+        # resolve the _CURRENT marker)
         from big_data___knowledge_graph_construction_with_llm_spark.operators.layout import (
             compact_table,
             write_table,
@@ -856,7 +843,8 @@ def manifest_scale_experiment(
         # ~files_per_dir files per dir, disjoint k spans within a dir.
         # fp is a scattered fingerprint: no span stats recorded for it
         # (you wouldn't min/max a random hash), so the bloom leg below
-        # isolates what blooms add over spans for point lookups
+        # isolates what blooms add over spans for point lookups.
+        # write_s includes the write-time fp bloom build
         t0 = time.perf_counter()
         write_table(
             df.repartitionByRange(files_per_dir, F.col("k"))
@@ -864,6 +852,8 @@ def manifest_scale_experiment(
             root,
             partition_by=["bucket"],
             stats_cols=["id", "bucket", "k"],
+            bloom_cols=["fp"],
+            bloom_fpp=0.001,
         )
         write_s = round(time.perf_counter() - t0, 2)
         man = read_manifest(spark, root)
@@ -905,34 +895,29 @@ def manifest_scale_experiment(
         prune_b_s = round(time.perf_counter() - t0, 3)
 
         # bloom leg (r11): a point lookup on the scattered fingerprint
-        # column. Span-only control first (no fp stats -> the prune
-        # keeps every file), then build blooms and measure the same
-        # lookup opening ~1 file of n_files
+        # column. Span-only control first (the manifest without its
+        # blooms: no fp stats -> the prune keeps every file), then the
+        # same lookup through the write-time bloom opening ~1 file of
+        # n_files
         import hashlib
-
-        from big_data___knowledge_graph_construction_with_llm_spark.operators.layout import (
-            add_manifest_blooms,
-        )
 
         probe_id = n_rows // 2
         probe_fp = hashlib.md5(str(probe_id).encode()).hexdigest()
-        plan_span = _prune_plan(spark, man, ("fp", "==", probe_fp), gen_dir)
+        span_only = {k: v for k, v in man.items() if k != "blooms"}
+        plan_span = _prune_plan(
+            spark, span_only, ("fp", "==", probe_fp), gen_dir
+        )
         t0 = time.perf_counter()
-        add_manifest_blooms(spark, root, ["fp"], fpp=0.001)
-        bloom_build_s = round(time.perf_counter() - t0, 2)
-        man2 = read_manifest(spark, root)
-        t0 = time.perf_counter()
-        plan_fp = _prune_plan(spark, man2, ("fp", "==", probe_fp), gen_dir)
+        plan_fp = _prune_plan(spark, man, ("fp", "==", probe_fp), gen_dir)
         bloom_prune_s = round(time.perf_counter() - t0, 3)
         hit = read_table(spark, root, where=("fp", "==", probe_fp))
         bloom_opened = len(hit.select("id").inputFiles())
         hit_ids = [r["id"] for r in hit.select("id").collect()]
         plan_miss = _prune_plan(
-            spark, man2, ("fp", "==", "0" * 32), gen_dir
+            spark, man, ("fp", "==", "0" * 32), gen_dir
         )
         bloom_files = fsutil.list_files(spark, f"{gen_dir}/_MANIFEST_BLOOM")
         bloom = {
-            "build_s": bloom_build_s,
             "sidecar_bytes": sum(sz for _, sz in bloom_files),
             "span_only_kept_files": plan_span["kept_files"],
             "kept_files": plan_fp["kept_files"],

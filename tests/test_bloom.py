@@ -7,7 +7,7 @@ Contracts pinned here:
 - Files-opened: a point lookup on a bloomed scattered column opens
   far fewer files than the span-only prune (which keeps ~all of them).
 - Conservative fallbacks: non-canonicalizable values, missing sidecar,
-  un-bloomed columns, and v1/bloom-less manifests all keep files.
+  un-bloomed columns, and bloom-less manifests all keep files.
 - Python/JVM hash parity: the executor-built bitset and the
   driver-computed word masks agree byte-for-byte.
 """
@@ -67,9 +67,12 @@ def test_bloom_point_lookup_skips_files_vs_span_only(spark, tmp_path):
     assert len(before.select("id").inputFiles()) >= N_FILES - 3
     assert before.count() == 1
 
-    blooms = layout.add_manifest_blooms(spark, root, ["key"], fpp=0.001)
+    # the same table written with a bloom on the key
+    bloomed = f"{tmp_path}/b"
+    _write(spark, bloomed, bloom_cols=["key"], bloom_fpp=0.001)
+    blooms = layout.read_manifest(spark, bloomed)["blooms"]
     assert blooms["key"]["dtype"] == "string"
-    after = layout.read_table(spark, root, where=("key", "==", want["key"]))
+    after = layout.read_table(spark, bloomed, where=("key", "==", want["key"]))
     assert len(after.select("id").inputFiles()) <= 3
     assert [r["id"] for r in after.collect()] == [1234]
 
@@ -343,7 +346,7 @@ def test_bloom_bigint_beyond_2_53_with_nulls_no_false_negative(
     ent = man["blooms"]["fp64"]
     side = {
         r["file"]: r["bits"]
-        for r in spark.read.parquet(f"{gen}/{ent['table']}").collect()
+        for r in spark.read.parquet(f"{gen}/{layout._BLOOM_TABLE}").collect()
     }
     f1999 = (
         layout.read_table(spark, root)
@@ -364,44 +367,6 @@ def test_bloom_bigint_beyond_2_53_with_nulls_no_false_negative(
     # no-ops, the residual filter answers
     nulls = layout.read_table(spark, root).filter(F.col("fp64").isNull())
     assert nulls.count() == 16
-
-
-def test_bloom_retrofit_second_column_keeps_first(spark, tmp_path):
-    """ADVICE r11 (medium): retrofitting a SECOND column must not
-    overwrite the first column's sidecar — each add_manifest_blooms
-    writes a fresh table name and the per-column pointer routes reads,
-    so both columns keep their point-lookup pruning."""
-    root = f"{tmp_path}/t"
-    _write(spark, root, bloom_cols=None)
-    layout.add_manifest_blooms(spark, root, ["key"], fpp=0.001)
-    layout.add_manifest_blooms(spark, root, ["scr"], fpp=0.001)
-    man = layout.read_manifest(spark, root)
-    assert set(man["blooms"]) == {"key", "scr"}
-    t_key = man["blooms"]["key"]["table"]
-    t_scr = man["blooms"]["scr"]["table"]
-    assert t_key != t_scr
-    gen = layout._resolve_table_generation(spark, root)
-    # both sidecars exist and still carry their column's bitsets
-    for t, c in ((t_key, "key"), (t_scr, "scr")):
-        side = spark.read.parquet(f"{gen}/{t}")
-        assert side.filter(F.col("col") == c).count() == N_FILES
-    # and both columns actually prune
-    want = _key_of(spark, root, 1234)
-    hit_key = layout.read_table(spark, root, where=("key", "==", want["key"]))
-    assert [r["id"] for r in hit_key.collect()] == [1234]
-    assert len(hit_key.select("id").inputFiles()) <= 3
-    hit_scr = layout.read_table(spark, root, where=("scr", "==", want["scr"]))
-    assert 1234 in [r["id"] for r in hit_scr.collect()]
-    assert len(hit_scr.select("id").inputFiles()) <= 3
-    # a third retrofit re-blooming an existing column repoints it
-    # without disturbing the other
-    layout.add_manifest_blooms(spark, root, ["key"], fpp=0.01)
-    man2 = layout.read_manifest(spark, root)
-    assert man2["blooms"]["key"]["table"] not in (t_key, t_scr)
-    assert man2["blooms"]["scr"]["table"] == t_scr
-    again = layout.read_table(spark, root, where=("scr", "==", want["scr"]))
-    assert 1234 in [r["id"] for r in again.collect()]
-    assert len(again.select("id").inputFiles()) <= 3
 
 
 def test_open_table_handle_parity_and_reuse(spark, tmp_path):

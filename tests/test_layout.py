@@ -1,5 +1,5 @@
-"""Data-layout management (`operators.layout`): small-file compaction,
-range clustering, Z-order — with the skip claims verified against
+"""Data-layout management (`operators.layout`): generational small-file
+compaction, range clustering, Z-order — with the skip claims verified against
 executor `input_bytes`, not plan text."""
 from __future__ import annotations
 
@@ -8,10 +8,11 @@ from pyspark.sql import functions as F
 
 from big_data___knowledge_graph_construction_with_llm_spark.operators.layout import (
     clustering_stats,
-    compact_small_files,
+    compact_table,
     decoded_scan_rows,
-    file_stats,
+    read_table,
     with_zorder,
+    write_table,
     write_clustered,
     zorder_key,
 )
@@ -35,37 +36,15 @@ def corpus_path(spark, tmp_path_factory):
     return p
 
 
-def test_file_stats_census(spark, corpus_path):
-    st = file_stats(spark, corpus_path, target_file_bytes=1 << 30)
-    assert st["n_files"] == 16
-    assert st["total_bytes"] > 0
-    assert st["min_file_bytes"] <= st["mean_file_bytes"] <= st["max_file_bytes"]
-    assert st["n_small_files"] == 16  # all far below the 1 GiB target
-
-
-def test_compact_small_files_preserves_data_and_shrinks_count(spark, tmp_path):
-    p = str(tmp_path / "frag")
-    df = _corpus(spark, 50_000)
-    df.repartition(32).write.parquet(p)
-    checksum = df.agg(F.sum(F.crc32("payload")).alias("c")).first()["c"]
-    rep = compact_small_files(spark, p, target_file_bytes=1 << 30)
-    assert rep["before"]["n_files"] == 32
-    assert rep["after"]["n_files"] == 1
-    out = spark.read.parquet(p)
-    assert out.count() == 50_000
-    assert out.agg(F.sum(F.crc32("payload")).alias("c")).first()["c"] == checksum
-
-
 def test_compact_partitioned_rewrite(spark, tmp_path):
-    p = str(tmp_path / "part")
+    root = str(tmp_path / "part")
     df = _corpus(spark, 20_000).withColumn("bucket", F.col("id") % 4)
-    df.repartition(16).write.partitionBy("bucket").parquet(p)
-    before = file_stats(spark, p)["n_files"]
-    rep = compact_small_files(
-        spark, p, target_file_bytes=1 << 30, partition_by=["bucket"]
+    write_table(df.repartition(16), root, partition_by=["bucket"])
+    rep = compact_table(
+        spark, root, target_file_bytes=1 << 30, partition_by=["bucket"]
     )
-    assert rep["after"]["n_files"] < before
-    out = spark.read.parquet(p)
+    assert rep["after"]["n_files"] < rep["before"]["n_files"]
+    out = read_table(spark, root)
     assert out.count() == 20_000
     # partition layout survives (pruning still works after compaction)
     assert "bucket" in out.columns
@@ -74,7 +53,7 @@ def test_compact_partitioned_rewrite(spark, tmp_path):
 
 def test_compact_missing_path_raises(spark, tmp_path):
     with pytest.raises(ValueError):
-        compact_small_files(spark, str(tmp_path / "nope"))
+        compact_table(spark, str(tmp_path / "nope"))
 
 
 def test_clustered_scan_skips_decoded_rows(spark, corpus_path, tmp_path_factory):
@@ -580,8 +559,9 @@ def test_prune_manifest_files_op_semantics():
     )
 
     man = {
-        "version": 1,
+        "version": 2,
         "columns": ["x", "s"],
+        "types": {"x": "bigint", "s": "string"},
         "files": [
             {"file": "f0", "rows": 10, "stats": {"x": [0, 9], "s": ["a", "m"]}},
             {"file": "f1", "rows": 10, "stats": {"x": [10, 19], "s": ["n", "z"]}},
@@ -770,28 +750,6 @@ def test_manifest_timestamp_bounds_are_timezone_safe(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.session.timeZone", old_tz)
     assert ZoneInfo  # imported for documentation of the OS-zone probe
-
-    # legacy v1 manifest (naive-ISO spans, no types) + tz-aware value:
-    # uninterpretable comparison keeps every file — never a wrong drop
-    from big_data___knowledge_graph_construction_with_llm_spark.operators.layout import (
-        prune_manifest_files,
-    )
-
-    man_v1 = {
-        "version": 1,
-        "columns": ["ts"],
-        "files": [
-            {"file": "f0", "rows": 1,
-             "stats": {"ts": ["2024-01-01T00:00:00", "2024-01-02T00:00:00"]}},
-            {"file": "f1", "rows": 1,
-             "stats": {"ts": ["2024-06-01T00:00:00", "2024-06-02T00:00:00"]}},
-        ],
-    }
-    aware = dt.datetime(2024, 1, 1, 12, tzinfo=dt.timezone.utc)
-    assert prune_manifest_files(man_v1, ("ts", "==", aware)) == ["f0", "f1"]
-    # naive value against v1 keeps the legacy lexicographic behavior
-    naive = dt.datetime(2024, 1, 1, 12)
-    assert prune_manifest_files(man_v1, ("ts", "==", naive)) == ["f0"]
 
 
 def test_commit_marker_failure_semantics(spark, tmp_path, monkeypatch):
@@ -1021,7 +979,7 @@ def test_compact_table_carries_ingest_ledger(spark, tmp_path):
 
 def test_absorbed_ledger_range_encoding():
     """The ledger is O(gaps): contiguous batch ids collapse to [lo,hi]
-    ranges; the decoder accepts both forms (bare ints for legacy)."""
+    ranges; singletons stay bare ints."""
     from big_data___knowledge_graph_construction_with_llm_spark.operators.layout import (
         _encode_ranges,
     )
@@ -1221,70 +1179,6 @@ def test_ingest_lineage_isolates_streams_and_restarts(spark, tmp_path):
             landing_append(batch(0, 1), root, 9, lineage=bad)
 
 
-def test_ingest_legacy_layout_migrates_under_legacy_lineage(spark, tmp_path):
-    """A root written by the pre-lineage engine (bare _batch_id= dirs,
-    bare-list ledger) keeps reading, absorbing, and replay-subtracting
-    under the reserved 'legacy' lineage, alongside new lineaged
-    batches."""
-    import json
-
-    from big_data___knowledge_graph_construction_with_llm_spark import fsutil
-    from big_data___knowledge_graph_construction_with_llm_spark.operators.layout import (
-        absorb_landing,
-        landing_append,
-        read_ingest_table,
-        read_table,
-        write_table,
-    )
-
-    root = str(tmp_path / "ingest_legacy")
-
-    def legacy_land(df, batch_id):
-        # what the pre-lineage landing_append wrote
-        (
-            df.withColumn("_batch_id", F.lit(int(batch_id)))
-            .write.partitionBy("_batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite")
-            .parquet(f"{root}/landing")
-        )
-
-    # a pre-lineage generation: batches 0-1 absorbed under a bare-list
-    # ledger, with batch 1's landing partition still on disk (deferred
-    # delete), plus an unabsorbed legacy batch 2
-    gen_df = spark.range(20).toDF("id").withColumn(
-        "_batch_id", (F.col("id") / 10).cast("int").cast("long")
-    )
-    write_table(
-        gen_df, root, manifest=False,
-        extra_files={"_ABSORBED": json.dumps([[0, 1]])},
-    )
-    legacy_land(spark.range(10, 20).toDF("id"), 1)  # absorbed straggler
-    legacy_land(spark.range(20, 25).toDF("id"), 2)  # unabsorbed
-
-    live = read_ingest_table(spark, root)
-    assert live.count() == 25  # straggler subtracted, batch 2 visible
-    assert live.filter(F.col("_lineage") == "legacy").count() == 25
-
-    # new lineaged batches coexist with the legacy tail
-    landing_append(spark.range(100, 104).toDF("id"), root, 0, lineage="runA")
-    assert read_ingest_table(spark, root).count() == 29
-
-    # absorb folds legacy batch 2 AND (runA, 0); the ledger goes
-    # object-form with the legacy ranges preserved
-    rep = absorb_landing(spark, root, min_batches=1)
-    assert rep["absorbed_batches"] == 2 and rep["committed"] is True
-    assert read_table(spark, root).count() == 29
-    ledger = json.loads(
-        fsutil.read_text(spark, f"{root}/{rep['generation']}/_ABSORBED")
-    )
-    assert ledger == {"legacy": [[0, 2]], "runA": [0]}
-    # replays of both forms stay subtracted
-    legacy_land(spark.range(20, 25).toDF("id"), 2)
-    landing_append(spark.range(100, 104).toDF("id"), root, 0, lineage="runA")
-    assert read_ingest_table(spark, root).count() == 29
-
-
 def test_incremental_absorb_chains_generations(spark, tmp_path):
     """absorb_landing(incremental=True) is O(landed batches), not
     O(table): the new generation holds ONLY the absorbed rows and
@@ -1358,12 +1252,12 @@ def test_incremental_absorb_chains_generations(spark, tmp_path):
 
 
 def test_incremental_absorb_onto_legacy_generation(spark, tmp_path):
-    """An incremental delta chained onto a PRE-LINEAGE generation: the
-    parent's rows read under the legacy lineage, filtered and pruned
-    chain reads stay exact, and lineage predicates work across the
-    mixed chain."""
-    import json
-
+    """An incremental delta chained onto a generation WITHOUT a
+    ``_lineage`` column — a table seeded by write_table, as a serving
+    edge table is before streaming absorbs feed it: the seed rows read
+    under the reserved legacy lineage, filtered and bloom-pruned chain
+    reads stay exact, and lineage predicates work across the mixed
+    chain."""
     from big_data___knowledge_graph_construction_with_llm_spark.operators.layout import (
         absorb_landing,
         landing_append,
@@ -1373,14 +1267,7 @@ def test_incremental_absorb_onto_legacy_generation(spark, tmp_path):
     )
 
     root = str(tmp_path / "ingest_chain_legacy")
-    # a pre-lineage generation (no _lineage column, bare-list ledger)
-    gen_df = spark.range(20).toDF("id").withColumn(
-        "_batch_id", (F.col("id") / 10).cast("int").cast("long")
-    )
-    write_table(
-        gen_df, root, manifest=False,
-        extra_files={"_ABSORBED": json.dumps([[0, 1]])},
-    )
+    write_table(spark.range(20).toDF("id"), root, bloom_cols=["id"])
     landing_append(spark.range(100, 110).toDF("id"), root, 0, lineage="runA")
     rep = absorb_landing(spark, root, min_batches=1, incremental=True)
     assert rep["parent"] is not None and rep["committed"] is True
@@ -1395,10 +1282,55 @@ def test_incremental_absorb_onto_legacy_generation(spark, tmp_path):
     # a lineage predicate across the mixed chain (parent lacks the col)
     got = read_table(spark, root, where=("_lineage", "==", "legacy"))
     assert got.count() == 20
+    # the seed's bloom still serves point lookups through the chain
+    assert [r["id"] for r in read_table(spark, root, where=("id", "==", 7)).collect()] == [7]
+    live = read_ingest_table(spark, root, where=("_lineage", "==", "legacy"))
+    assert live.count() == 20
     assert read_ingest_table(spark, root).count() == 30
-    # replays of both forms stay subtracted against the head ledger
+    # a replay stays subtracted against the head ledger
     landing_append(spark.range(100, 110).toDF("id"), root, 0, lineage="runA")
     assert read_ingest_table(spark, root).count() == 30
+
+    # every writer leaves only the on-disk forms the readers accept:
+    # compaction (blooms inherited), a rewrite absorb, a pending batch
+    compact_table(spark, root, target_file_bytes=1 << 30)
+    landing_append(spark.range(200, 205).toDF("id"), root, 1, lineage="runA")
+    absorb_landing(spark, root, min_batches=1)
+    landing_append(spark.range(300, 305).toDF("id"), root, 2, lineage="runA")
+    assert read_ingest_table(spark, root).count() == 40
+    _assert_current_formats(root)
+
+
+def _assert_current_formats(root: str) -> None:
+    """Landing dirs are only ``_lineage=*/_batch_id=*``, every
+    ``_ABSORBED`` ledger is a JSON object, every ``_MANIFEST`` is
+    version 2 with ``types`` and ``dirs``, and the only bloom sidecar
+    is ``_MANIFEST_BLOOM``."""
+    import json
+    import os
+
+    def subdirs(path):
+        return [n for n in os.listdir(path) if os.path.isdir(os.path.join(path, n))]
+
+    landing = os.path.join(root, "landing")
+    for lin in subdirs(landing):
+        assert lin.startswith("_lineage="), lin
+        for b in subdirs(os.path.join(landing, lin)):
+            assert b.startswith("_batch_id="), b
+    seen = set()
+    for path, dirs, files in os.walk(root):
+        assert all(
+            d == "_MANIFEST_BLOOM" for d in dirs if d.startswith("_MANIFEST_BLOOM")
+        ), dirs
+        for name in {"_ABSORBED", "_MANIFEST"} & set(files):
+            with open(os.path.join(path, name)) as fh:
+                doc = json.load(fh)
+            seen.add(name)
+            if name == "_ABSORBED":
+                assert isinstance(doc, dict), doc
+            else:
+                assert doc["version"] == 2 and "types" in doc and "dirs" in doc
+    assert seen == {"_ABSORBED", "_MANIFEST"}
 
 
 def test_read_ingest_table_where_prunes_generation_leg(spark, tmp_path):
@@ -1710,9 +1642,9 @@ def test_pruned_read_schema_evolved_chain(spark, tmp_path):
 def test_ingest_lineage_special_chars_key_raw(spark, tmp_path):
     """ADVICE r10: lineage 'pt:BR' lands under the hive-ESCAPED dir
     '_lineage=pt%3ABR', but the _ABSORBED ledger and the pending map
-    key the RAW string users filter the _lineage column on; an old
-    ledger keyed by the escaped dir name migrates on read; raw '%' in
-    a lineage is rejected (it would make the decoding ambiguous)."""
+    key the RAW string users filter the _lineage column on, and
+    gc_landing sweeps the escaped dir under that raw key; raw '%' in a
+    lineage is rejected (it would make the decoding ambiguous)."""
     import json
 
     from big_data___knowledge_graph_construction_with_llm_spark import fsutil
@@ -1744,13 +1676,9 @@ def test_ingest_lineage_special_chars_key_raw(spark, tmp_path):
         == 20
     )
 
-    # an OLD ledger keyed by the escaped dir name migrates on read:
-    # rewrite the ledger the way the r10 engine did and re-check the
-    # replay subtraction still holds
-    fsutil.write_text(
-        spark, f"{gen}/_ABSORBED", json.dumps({"pt%3ABR": [[0, 1]]})
-    )
-    assert layout._absorbed_ids(spark, gen) == {"pt:BR": {0, 1}}
+    # the replayed (absorbed) partition sweeps under its raw lineage
+    swept = layout.gc_landing(spark, root, max_age_ms=0, now_ms=2**62)
+    assert swept == ["_lineage=pt%3ABR/_batch_id=0"]
     assert read_ingest_table(spark, root).count() == 20
 
     with pytest.raises(ValueError, match="lineage"):

@@ -140,6 +140,29 @@ def test_release_is_safe_on_plain_frames(spark):
     assert df.count() == 10
 
 
+def test_drain_releases_every_frame_when_one_unpersist_raises(spark, monkeypatch):
+    """One stale frame's failing unpersist must not leak the rest of
+    the due batch: every frame is attempted, then the first error
+    surfaces from the draining materialize()."""
+    frames = [spark.range(n) for n in (1, 2, 3)]
+    attempted = []
+
+    def unpersist(df, blocking):
+        attempted.append(df)
+        if df is frames[1]:
+            raise RuntimeError("stale frame")
+
+    monkeypatch.setattr(M, "_unpersist_now", unpersist)
+    for df in frames:
+        M.release(df)
+    import pytest
+
+    with pytest.raises(RuntimeError, match="stale frame"):
+        M.materialize(spark.range(5))
+    assert all(any(a is df for a in attempted) for df in frames)
+    assert not any(q is df for _t, q in M._pending_release for df in frames)
+
+
 def test_iterative_release_bounds_storage(spark):
     """The supersede pattern the operators use: materialize stage N+1,
     release stage N. Persisted-RDD storage must stay bounded at ~one

@@ -1781,8 +1781,8 @@ def test_bm25_stats_sidecar_serving_and_batch(spark, tmp_path):
 
 def test_refresh_bm25_stats_after_incremental_absorb(spark, tmp_path):
     """Incremental absorbs write delta generations WITHOUT a stats
-    sidecar; refresh_bm25_stats retrofits one onto the live generation
-    (the add_manifest_blooms model), after which serving is back to
+    sidecar; refresh_bm25_stats retrofits one onto the live generation,
+    after which serving is back to
     zero stats jobs — and a corrupt/torn sidecar reads as absence, not
     a crash."""
     from big_data___knowledge_graph_construction_with_llm_spark import fsutil

@@ -1166,20 +1166,20 @@ def test_prune_manifest_soundness_property():
             # pair x/y values positionally; unequal lengths cycle
             for i, (xs, ys) in enumerate(files)
         ]
-        manifest = {"version": 1, "columns": ["x", "y"], "files": entries}
+        manifest = {
+            "version": 2,
+            "columns": ["x", "y"],
+            "types": {"x": "bigint", "y": "bigint"},
+            "n_files": len(entries),
+            "total_rows": sum(e["rows"] for e in entries),
+            "files": entries,
+            "dirs": _dirs_from_file_entries(entries, ["x", "y"]),
+        }
         kept = set(prune_manifest_files(manifest, preds))
 
-        # v2 inline: dir-level spans prune first, whole-dir collapse
-        # may hand a superset — completeness must still hold
-        man2 = dict(
-            manifest,
-            version=2,
-            types={"x": "bigint", "y": "bigint"},
-            n_files=len(entries),
-            total_rows=sum(e["rows"] for e in entries),
-            dirs=_dirs_from_file_entries(entries, ["x", "y"]),
-        )
-        plan = _prune_plan(None, man2, preds, gen_dir="unused")
+        # dir-level spans prune first, whole-dir collapse may hand a
+        # superset — completeness must still hold
+        plan = _prune_plan(None, manifest, preds, gen_dir="unused")
         kept2 = set(plan["files"]) | {
             e["file"]
             for e in entries

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data___knowledge_graph_construction_with_llm_spark.sources.rdf import (

@@ -943,6 +943,21 @@ def test_compact_fingerprint_store_e2e(spark, tmp_path):
         5,
     )
     assert emitted[5] == [12]
+    # the writers above leave only the generational layout: no flat
+    # lineage=* partitions at the store root, landing partitions nested
+    # lineage=*/batch_id=*
+    import os
+
+    assert not any(n.startswith("lineage=") for n in os.listdir(store))
+    landing = os.path.join(store, "landing")
+    for lin in os.listdir(landing):
+        if os.path.isdir(os.path.join(landing, lin)):
+            assert lin.startswith("lineage="), lin
+            assert all(
+                b.startswith("batch_id=")
+                for b in os.listdir(os.path.join(landing, lin))
+                if os.path.isdir(os.path.join(landing, lin, b))
+            )
 
 
 def test_compact_fingerprint_store_loses_race_gracefully(
@@ -1028,65 +1043,6 @@ def test_compact_fingerprint_store_loses_race_gracefully(
     with pytest.raises(Exception):
         compact_fingerprint_store(spark, store, min_batches=1)
     assert real_mk(spark, store) == gen_before  # marker untouched
-
-
-def test_compact_fingerprint_store_migrates_legacy_flat_layout(spark, tmp_path):
-    """A store written by the pre-generational sink (flat lineage=*
-    partitions at the ROOT) keeps deduping unchanged, and compaction
-    absorbs the legacy partitions into the first generation."""
-    from big_data___knowledge_graph_construction_with_llm_spark import fsutil
-    from big_data___knowledge_graph_construction_with_llm_spark.operators.dedup import (
-        content_fingerprints,
-    )
-    from big_data___knowledge_graph_construction_with_llm_spark.streaming.events import (
-        compact_fingerprint_store,
-        incremental_dedup_sink,
-    )
-
-    store = str(tmp_path / "fp-legacy")
-    legacy = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta")], "doc_id long, text string"
-    )
-    (  # the OLD writer's layout: partitions directly under the root
-        content_fingerprints(legacy, "text", "doc_id")
-        .withColumn("lineage", F.lit("old"))
-        .withColumn("batch_id", F.lit(0).cast("long"))
-        .write.partitionBy("lineage", "batch_id")
-        .parquet(store)
-    )
-    emitted: dict[int, list[int]] = {}
-
-    def emit(df, batch_id):
-        emitted.setdefault(batch_id, []).extend(
-            sorted(r["doc_id"] for r in df.collect())
-        )
-
-    sink = incremental_dedup_sink(store, "text", "doc_id", emit, lineage="new")
-    sink(
-        spark.createDataFrame(
-            [(3, "alpha"), (4, "gamma")], "doc_id long, text string"
-        ),
-        0,
-    )
-    assert emitted[0] == [4]  # 3 dup of legacy history
-    rep = compact_fingerprint_store(spark, store, min_batches=1)
-    assert rep["compacted"] is True and rep["absorbed_batches"] == 2
-    assert _legacy_free(spark, store)
-    sink(
-        spark.createDataFrame(
-            [(5, "beta"), (6, "delta")], "doc_id long, text string"
-        ),
-        1,
-    )
-    assert emitted[1] == [6]  # legacy history survived the migration
-
-
-def _legacy_free(spark, store: str) -> bool:
-    from big_data___knowledge_graph_construction_with_llm_spark import fsutil
-
-    return not any(
-        n.startswith("lineage=") for n, _ in fsutil.list_dir(spark, store)
-    )
 
 
 def test_incremental_dedup_sink_expectations_quarantine(spark, tmp_path):

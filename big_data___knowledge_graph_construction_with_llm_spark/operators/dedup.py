@@ -3,10 +3,13 @@
 Exact dedup generalizes the reference's ``drop_duplicates``
 (``Art-Knowledge-Graph-AWS/ingestion/DataIngestionBatch.py:60``); the
 near-dup family (MinHash+LSH, SimHash, n-gram Jaccard) is the 100 TB
-extension. Everything is expressed with built-in functions —
-``xxhash64`` for hashing, higher-order array functions for signatures —
-so the whole pipeline stays in the JVM / whole-stage codegen. No Python
-UDFs anywhere in this module.
+extension. Hashing, shingling and verification are built-in functions —
+``xxhash64``, higher-order array functions, ``array_intersect`` — so
+they stay in the JVM / whole-stage codegen. The one Python leg is the
+MinHash minima of :func:`minhash_signatures`: a single Arrow-batched
+``mapInArrow`` kernel (numpy over list offsets, no per-row Python), so
+signatures need no shuffle. No row-at-a-time Python UDFs anywhere in
+this module.
 """
 
 from __future__ import annotations
@@ -15,6 +18,7 @@ import logging
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from big_data___knowledge_graph_construction_with_llm_spark.materialize import materialize
 
@@ -149,9 +153,10 @@ def minhash_signature(
 
     NOTE: inlining the shingle pipeline into ``num_hashes`` array passes
     makes a huge codegen unit; for the hot path use
-    ``minhash_signatures`` (explode + partial agg) instead — same hash
-    family, same output, far cheaper. This column form is kept for
-    composability on already-small inputs.
+    ``minhash_signatures`` (one hash array per row, minima in an Arrow
+    kernel) instead — same hash family, same output, far cheaper. This
+    column form is kept for composability on already-small inputs and
+    as the reference the tests pin ``minhash_signatures`` against.
     """
     rnd = _lcg_params(num_hashes, seed)
     base = F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_P31)))
@@ -172,28 +177,75 @@ def minhash_signatures(
     seed: int = 7,
     shingle_n: int = 3,
 ) -> DataFrame:
-    """MinHash signatures as ``(id, _m0.._m{n-1})`` via explode + hash
-    aggregation — the 100 TB path.
+    """MinHash signatures as ``(_id, _m0.._m{n-1})``, row-local — no
+    shuffle, no aggregate plan.
 
-    One pass: explode shingles → one xxhash64 per shingle → groupBy(id)
-    with ``num_hashes`` cheap ``min((h*a+b) mod p)`` aggregates. Partial
-    aggregation combines map-side, so the shuffle carries only
-    ``num_hashes`` longs per document regardless of document size, and
-    the codegen unit stays small (one arithmetic expression per hash,
-    not one full shingle pipeline per hash).
+    The JVM computes each document's shingle-hash array
+    (``transform(shingles, pmod(xxhash64, P31))``); one Arrow kernel
+    (``mapInArrow``) then takes all ``num_hashes`` minima of
+    ``(a*h + b) mod P31`` with numpy over the list offsets
+    (``minimum.reduceat``). Why not explode + ``groupBy(id)`` with
+    ``num_hashes`` min-aggregates: that pays an exchange plus the
+    planning of a 64-aggregate plan per call, which dominates at batch
+    sizes (a few hundred docs), and per-row minima need no shuffle.
+
+    Bit-identical to :func:`minhash_signature`: h, a, b < 2^31, so every
+    product stays under 2^62 and int64 numpy arithmetic equals Spark's
+    long arithmetic. A NULL text hashes as one NULL shingle (its
+    ``shingles`` array is ``[NULL]``); a row whose hash array is empty
+    or NULL yields no signature. One row out per row in: ids are
+    expected unique, as every caller provides.
     """
-    tok = df.select(
+    hashes = df.select(
         F.col(id_col).alias("_id"),
-        F.explode(shingles(text_col, shingle_n)).alias("_s"),
+        F.transform(
+            shingles(text_col, shingle_n),
+            lambda s: F.pmod(F.xxhash64(s), F.lit(_P31)),
+        ).alias("_h"),
     )
-    h = tok.select("_id", F.pmod(F.xxhash64("_s"), F.lit(_P31)).alias("_h"))
-    aggs = [
-        F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), F.lit(_P31))).alias(
-            f"_m{i}"
-        )
-        for i, (a, b) in enumerate(_lcg_params(num_hashes, seed))
-    ]
-    return h.groupBy("_id").agg(*aggs)
+    schema = T.StructType(
+        [hashes.schema["_id"]]
+        + [T.StructField(f"_m{i}", T.LongType()) for i in range(num_hashes)]
+    )
+    return hashes.mapInArrow(
+        _minhash_batches(_lcg_params(num_hashes, seed), schema.names), schema
+    )
+
+
+def _minhash_batches(params: list[tuple[int, int]], names: list[str]):
+    """The ``mapInArrow`` body of :func:`minhash_signatures`: per Arrow
+    batch, the row-wise minimum of every hash function over each row's
+    slice of the flattened hash values."""
+
+    def run(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        for batch in batches:
+            ids, hs = batch.column(0), batch.column(1)
+            offs = hs.offsets.to_numpy()
+            keep = np.diff(offs) > 0
+            if hs.null_count:
+                keep &= hs.is_valid().to_numpy(zero_copy_only=False)
+            # reduceat over interleaved (start, end) bounds: the even
+            # slots are exactly each kept row's [start, end) minimum, so
+            # empty, NULL and sliced-away ranges never leak in; the
+            # trailing sentinel keeps end == len(values) a valid index
+            bounds = np.empty(2 * int(keep.sum()), dtype=np.int64)
+            bounds[0::2] = offs[:-1][keep]
+            bounds[1::2] = offs[1:][keep]
+            vals = hs.values.to_numpy(zero_copy_only=False)
+            buf = np.zeros(len(vals) + 1, dtype=np.int64)
+            cols = [ids.filter(pa.array(keep))]
+            for a, b in params:
+                np.multiply(vals, a, out=buf[:-1])
+                buf[:-1] += b
+                np.remainder(buf[:-1], _P31, out=buf[:-1])
+                mins = np.minimum.reduceat(buf, bounds)[0::2] if len(bounds) else bounds
+                cols.append(pa.array(mins, pa.int64()))
+            yield pa.RecordBatch.from_arrays(cols, names=names)
+
+    return run
 
 
 def _lcg_params(n: int, seed: int) -> list[tuple[int, int]]:
@@ -502,20 +554,18 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     prune_to_pairs: bool = False,
 ) -> DataFrame:
-    """Exact n-gram Jaccard for given candidate ``pairs (id_a, id_b)``.
+    """Exact n-gram Jaccard for given distinct candidate
+    ``pairs (id_a, id_b)``.
 
-    Verification stage after LSH: explode distinct shingles, equi-join on
-    the shingle, count intersections, divide by union. Shuffle volume is
-    bounded by candidate count, not corpus size.
-
-    Shape (r14): the per-doc shingle-set SIZE rides the exploded token
-    frame instead of joining in afterwards — the former two sizes joins
-    collapse into the intersection aggregate (``min`` of a per-group
-    constant), two joins and one full re-derivation of the shingle
-    frame gone from the plan, bit-identical jaccard. Everything stays
-    LAZY: an eager checkpoint of the token frame was measured SLOWER at
-    bench scale than letting one action schedule the (independent,
-    concurrently-runnable) subtree copies.
+    Verification stage after LSH, per pair: join each pair to its two
+    docs' distinct-shingle arrays and compute ``size(array_intersect)``
+    over ``|A| + |B| - ∩`` — two pair-sized joins against a doc-sized
+    projection, no exploded shingle rows, no per-shingle join and no
+    ``groupBy(id_a, id_b)``: a shingle-keyed join would move one row per
+    shingle and pay three more exchanges at batch scale, where the
+    pairs are few. Zero-intersection pairs are not returned. A
+    NULL-text doc's only shingle is NULL, which intersects nothing, so
+    such docs are filtered out before shingling.
 
     ``prune_to_pairs=True`` semi-joins ``df`` down to the ids appearing
     in ``pairs`` before shingling. Set it when ``pairs`` is already
@@ -527,7 +577,9 @@ def ngram_jaccard_pairs(
     more for the id set, which was measured ~2x the whole query.
     """
     p = pairs.select("id_a", "id_b")
-    base = df.select(F.col(id_col).alias("_id"), F.col(text_col))
+    base = df.select(F.col(id_col).alias("_id"), F.col(text_col)).filter(
+        F.col(text_col).isNotNull()
+    )
     if prune_to_pairs:
         ids = (
             p.select(F.col("id_a").alias("_id"))
@@ -538,37 +590,20 @@ def ngram_jaccard_pairs(
     sh = base.select(
         "_id", F.array_distinct(shingles(text_col, shingle_n)).alias("_sh")
     )
-    tok = sh.select(
-        "_id", F.size("_sh").alias("_n"), F.explode("_sh").alias("_tok")
-    )
+    inter = F.size(F.array_intersect("_sa", "_sb"))
     return (
-        p.join(
-            tok.select(
-                F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "_tok"
-            ),
-            "id_a",
-        )
-        .join(
-            tok.select(
-                F.col("_id").alias("id_b"), F.col("_n").alias("_nb"), "_tok"
-            ),
-            ["id_b", "_tok"],
-        )
-        .groupBy("id_a", "id_b")
-        # _na/_nb are per-doc constants within a group; min() just carries
-        # them through the one aggregation the intersection already pays
-        .agg(
-            F.count("*").alias("_inter"),
-            F.min("_na").alias("_na"),
-            F.min("_nb").alias("_nb"),
-        )
+        p.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sa")), "id_a")
+        .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sb")), "id_b")
+        .select("id_a", "id_b", inter.alias("_inter"), "_sa", "_sb")
+        .filter(F.col("_inter") > 0)
         .select(
             "id_a",
             "id_b",
             # single int division — bit-identical across engines, no rounding
-            (F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))).alias(
-                "jaccard"
-            ),
+            (
+                F.col("_inter")
+                / (F.size("_sa") + F.size("_sb") - F.col("_inter"))
+            ).alias("jaccard"),
         )
     )
 
@@ -616,7 +651,7 @@ def simhash_signatures(
     hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """SimHash per document as ``(id, _sim)`` via explode + partial agg —
-    the 100 TB path (same shape as ``minhash_signatures``).
+    the 100 TB path.
 
     Explode distinct shingles, hash each once, then groupBy(id) with 64
     ``sum(±1)`` bit-counter aggregates (map-side combined); a final
@@ -1072,8 +1107,8 @@ def semantic_dedup(
     clusters). The component minimum is deterministic and keeps exactly
     one representative per family, matching ``exact_dedup_by_hash``'s
     min-id rule. ``max_iter``/``strict`` pass through to
-    ``connected_components`` (cluster chains longer than ``max_iter``
-    would split — strict makes that an error).
+    ``connected_components`` (on its loop path, cluster chains longer
+    than ``max_iter`` would split — strict makes that an error).
 
     Scale: pairs are LSH-blocked and capped (``max_bucket``), the
     component step runs on the PAIR graph (candidate-sized, not

@@ -147,8 +147,9 @@ def resolve_entities(
     (``block_fn(col) -> Column``, default ``default_entity_block`` —
     accent-folded first-2-chars × length bucket; swap in a phonetic key
     or minhash band for real data); verification is the early-exit 3-arg
-    ``levenshtein``; the cluster step is the same bounded-iteration
-    min-label propagation every other component op uses. Names and ids
+    ``levenshtein``; the cluster step is the ``connected_components``
+    every other component op uses (driver-side union-find while the
+    match graph is small, min-label propagation above). Names and ids
     shuffle; nothing quadratic in the table — EXCEPT within a block,
     which is why ``max_block`` exists: blocks larger than it are skipped
     before the self-join (same ``_cap_buckets`` backstop the dedup/LSH
@@ -156,8 +157,9 @@ def resolve_entities(
     handled by exact dedup than by a 10¹² levenshtein join). Set it at
     corpus scale; ``None`` keeps exhaustive small-data semantics.
 
-    ``max_iter``/``strict`` pass through to ``connected_components``:
-    a similarity chain longer than ``max_iter`` would otherwise resolve
+    ``max_iter``/``strict`` pass through to ``connected_components``,
+    where they bound only its loop: there a similarity chain longer than
+    ``max_iter`` would otherwise resolve
     one logical cluster to several canonicals with only a logged
     warning — ``strict=True`` makes that a hard error.
     """

@@ -13,16 +13,22 @@ choice for long-running jobs on real clusters.
 
 Scale notes: each iteration shuffles on vertex id — pre-partitioning the
 edge table by ``dst`` (bucketing at rest) makes every iteration's join
-co-located; convergence checks are ``limit(1).count()`` probes, not full
-scans of the diff.
+co-located; convergence checks are ``observe`` metrics riding each
+iteration's materialization job (:func:`_observed_long`), not extra
+probe jobs. Per-iteration job overhead dominates small graphs on a
+dataflow engine (Pregelix, VLDB 2014), so :func:`connected_components`
+resolves pair graphs of up to ``DRIVER_CC_MAX_EDGES`` edges on the
+driver instead of iterating.
 """
 
 from __future__ import annotations
 
 import logging
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from big_data___knowledge_graph_construction_with_llm_spark.materialize import materialize, release
 
@@ -58,24 +64,57 @@ def _observed_long(obs: Observation, name: str, fallback) -> int:
             "observe metric %s not yet delivered; running fallback probe job",
             name,
         )
-    except AttributeError as exc:  # _jo/getOrEmpty gone: version drift
+    except Exception as exc:
+        # _jo/getOrEmpty gone (AttributeError: version drift), py4j
+        # transport errors (imported lazily by py4j, so matched on the
+        # module) and pyspark's own wrappers of either cost one probe;
+        # anything else is a real bug and surfaces
+        if not (
+            isinstance(exc, (AttributeError, PySparkException))
+            or type(exc).__module__.startswith("py4j")
+        ):
+            raise
         log.debug(
             "observe metric %s unreadable (%s); running fallback probe job",
             name,
             exc,
         )
-    except Exception as exc:
-        # py4j transport errors (Py4JError and friends) — imported lazily
-        # by py4j, so match on the module rather than the class
-        if type(exc).__module__.startswith("py4j"):
-            log.debug(
-                "observe metric %s unreadable (%s); running fallback probe",
-                name,
-                exc,
-            )
-        else:
-            raise
     return int(fallback())
+
+
+def _union_find_components(rows) -> list[tuple]:
+    """``(id, comp)`` for a collected ``(src, dst)`` edge list, comp =
+    component minimum — the driver path of :func:`connected_components`.
+    Union by smaller root keeps every root its component's minimum. A
+    NULL endpoint mirrors the loop, where NULL never matches a join key:
+    it links nothing, and its row carries the minimum label over its
+    non-NULL neighbours."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    null_nbrs = []
+    for s, d in rows:
+        for v in (s, d):
+            if v is not None:
+                parent.setdefault(v, v)
+        if s is None or d is None:
+            if s is not None or d is not None:
+                null_nbrs.append(d if s is None else s)
+            continue
+        rs, rd = find(s), find(d)
+        if rs != rd:
+            parent[max(rs, rd)] = min(rs, rd)
+    out = [(v, find(v)) for v in parent]
+    if null_nbrs:
+        out.append((None, min(find(v) for v in null_nbrs)))
+    return out
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -85,26 +124,64 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     return fwd.unionByName(rev).distinct()
 
 
+#: Raw edge count at or below which :func:`connected_components` resolves
+#: on the driver: 1e5 ``(src, dst)`` tuples are a few MB of driver memory
+#: and a sub-second union-find, where the label-propagation loop pays
+#: several Spark jobs per iteration whatever the graph size.
+DRIVER_CC_MAX_EDGES = 100_000
+
+
 def connected_components(
     edges: DataFrame, max_iter: int = 20, strict: bool = False
 ) -> DataFrame:
-    """Connected components (weak/undirected) by iterative min-label
-    propagation — edges are always symmetrized first. One-directional
+    """Connected components (weak/undirected): ``(id, comp)`` where
+    ``comp`` is the minimum vertex id in the component (deterministic).
+    Edges are always treated as undirected — one-directional
     propagation would compute neither weakly- nor strongly-connected
     components (strong CC needs a different algorithm entirely).
 
-    Returns ``(id, comp)`` where ``comp`` is the minimum vertex id in the
-    component (deterministic). Converges in O(diameter) iterations; each
-    iteration is ONE shuffle-join + ONE partial-aggregated min (r14):
-    the symmetrized edge table is augmented with a self-edge per vertex,
-    so the per-neighbor min INCLUDES the vertex's own label — the
-    min-propagation update, the old-vs-new change flag (the self-edge
-    row carries the old label through the same aggregate) and full
-    vertex coverage all come out of that single aggregation, where the
-    previous shape needed a second labels join per iteration. The
-    convergence probe rides the materialization job as an ``observe``
-    metric — zero probe jobs.
+    The raw ``(src, dst)`` list is materialized ONCE with an
+    ``observe``d row count riding that job. Then one of two exact paths
+    runs, chosen by that count (and the id type):
+
+    - at or below ``DRIVER_CC_MAX_EDGES`` (and for integral or plain
+      string ids, whose Python ordering is Spark's): collect the list
+      and resolve it with union-find, returning a small local frame —
+      one collect instead of O(diameter) iterations of joins. Every
+      near-dup pair graph and entity-match graph at batch scale lands
+      here.
+    - above it: symmetrize the materialized list and run iterative
+      min-label propagation. Each iteration is ONE shuffle-join + ONE
+      partial-aggregated min (r14): the symmetrized edge table is
+      augmented with a self-edge per vertex, so the per-neighbor min
+      INCLUDES the vertex's own label — the update, the old-vs-new
+      change flag and full vertex coverage come out of one aggregation.
+      The convergence probe rides the materialization job as an
+      ``observe`` metric — zero probe jobs. Converges in O(diameter)
+      iterations.
+
+    ``max_iter``/``strict`` bound only the loop (the driver path is
+    exact): a loop that has not converged after ``max_iter`` iterations
+    returns partial labels with a warning, or raises under ``strict``.
+    A NULL endpoint comes out of both paths the same way: it joins no
+    component, and appears as a NULL id carrying the smallest component
+    label among its non-NULL neighbours (if it has any).
     """
+    obs = Observation()
+    raw = materialize(
+        edges.select("src", "dst").observe(obs, F.count(F.lit(1)).alias("n"))
+    )
+    sym = symmetrize(raw)
+    id_type = sym.schema["src"].dataType
+    if (
+        isinstance(id_type, T.IntegralType) or id_type.simpleString() == "string"
+    ) and _observed_long(obs, "n", raw.count) <= DRIVER_CC_MAX_EDGES:
+        labels = raw.sparkSession.createDataFrame(
+            _union_find_components(raw.collect()),
+            T.StructType([T.StructField("id", id_type), T.StructField("comp", id_type)]),
+        )
+        release(raw)
+        return labels
     # materialize the augmented edge table ONCE — without this the
     # union+distinct (a full shuffle of the edge table) re-executes every
     # iteration, which at scale dominates the whole algorithm. No manual
@@ -112,7 +189,6 @@ def connected_components(
     # downstream stage to n tasks and disable AQE's partition coalescing
     # — measured SLOWER at bench scale than paying the join's own
     # exchange (the scale-adaptive choice is AQE's, guide §2.2).
-    sym = symmetrize(edges)
     verts = (
         sym.select(F.col("src").alias("id")).distinct()
     )  # symmetric ⇒ src covers dst-only vertices too
@@ -121,6 +197,7 @@ def connected_components(
             verts.select(F.col("id").alias("src"), F.col("id").alias("dst"))
         )
     )
+    release(raw)
     labels = materialize(
         e.select(F.col("dst").alias("id")).distinct().withColumn("comp", F.col("id"))
     )

@@ -205,9 +205,10 @@ def q_two_hop(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def q_connected_components(spark: SparkSession, sf: str) -> DataFrame:
-    """Connected components via iterative min-label propagation on the
-    bipartite customer—nation graph. Every component is one nation plus
-    its customers, so the oracle can state the fixpoint directly:
+    """Connected components of the bipartite customer—nation graph
+    (driver-side union-find up to ``DRIVER_CC_MAX_EDGES`` edges, i.e.
+    sf < 1; min-label propagation above). Every component is one nation
+    plus its customers, so the oracle can state the fixpoint directly:
     comp = least(n_name, min(c_name)) — exact parity proves convergence."""
     c = load(spark, sf, "customer")
     n = load(spark, sf, "nation")

@@ -94,16 +94,66 @@ def test_triangle_count_known_graph(spark):
     assert triangle_count(rev).head()["n_triangles"] == 4
 
 
-def test_connected_components_strict_raises_on_nonconvergence(spark):
+def test_connected_components_strict_raises_on_nonconvergence(spark, monkeypatch):
     import pytest
+
+    from big_data___knowledge_graph_construction_with_llm_spark.operators import graph_algos
 
     # chain a-b-c-d-e has diameter 4; max_iter=1 cannot converge
     e = _edges(spark, [("b", "a"), ("c", "b"), ("d", "c"), ("e", "d")])
+    # the driver path (5 edges ≤ DRIVER_CC_MAX_EDGES) is exact whatever
+    # max_iter says: no raise, full components
+    got = connected_components(e, max_iter=1, strict=True)
+    assert {r["id"]: r["comp"] for r in got.collect()} == {
+        v: "a" for v in "abcde"
+    }
+    # the loop (bound at 0) is what max_iter/strict govern
+    monkeypatch.setattr(graph_algos, "DRIVER_CC_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(e, max_iter=1, strict=True)
     # non-strict: partial labels + warning, no raise
     got = connected_components(e, max_iter=1)
     assert got.count() == 5
+
+
+def test_connected_components_null_endpoints_same_on_both_paths(
+    spark, monkeypatch
+):
+    """A NULL endpoint links nothing on either path; it comes out as a
+    NULL id carrying the smallest label among its non-NULL neighbours."""
+    from big_data___knowledge_graph_construction_with_llm_spark.operators import graph_algos
+
+    e = spark.createDataFrame(
+        [(1, 2), (2, 3), (5, None), (None, 7), (7, 8), (None, None),
+         (9, 9), (3, None)],
+        "src long, dst long",
+    )
+    driver = sorted(connected_components(e).collect(), key=str)
+    monkeypatch.setattr(graph_algos, "DRIVER_CC_MAX_EDGES", 0)
+    loop = sorted(connected_components(e).collect(), key=str)
+    assert driver == loop
+    assert {r["id"]: r["comp"] for r in driver} == {
+        1: 1, 2: 1, 3: 1, 5: 5, 7: 7, 8: 7, 9: 9, None: 1
+    }
+
+
+def test_observed_long_falls_back_on_pyspark_exception():
+    """A pyspark-wrapped failure reading the observed metric costs one
+    fallback probe instead of crashing the caller."""
+    from pyspark.errors import PySparkRuntimeError
+
+    from big_data___knowledge_graph_construction_with_llm_spark.operators.graph_algos import (
+        _observed_long,
+    )
+
+    class _Jo:
+        def getOrEmpty(self):
+            raise PySparkRuntimeError("observation unreadable")
+
+    class _Obs:
+        _jo = _Jo()
+
+    assert _observed_long(_Obs(), "n", lambda: 7) == 7
 
 
 def test_degree_orientation_bounds_star_wedges(spark):

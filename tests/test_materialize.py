@@ -29,9 +29,13 @@ def test_using_materializer_scoped_restore():
     assert M.get_materializer() is M.local_checkpoint
 
 
-def test_counting_materializer_is_used_by_operators(spark):
+def test_counting_materializer_is_used_by_operators(spark, monkeypatch):
     # inject a counting wrapper; connected_components must funnel every
-    # lineage cut through the seam (symmetrize + init labels + 1/iter)
+    # lineage cut through the seam: on the loop (forced with the driver
+    # bound at 0) raw edges + symmetrized edges + initial labels + 1/iter,
+    # on the driver path the one raw-edge materialization
+    from big_data___knowledge_graph_construction_with_llm_spark.operators import graph_algos
+
     calls = []
 
     def counting(df):
@@ -41,11 +45,18 @@ def test_counting_materializer_is_used_by_operators(spark):
     e = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("y", "x")], "src string, dst string"
     )
+    expect = {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
     with M.using_materializer(counting):
         comp = {r["id"]: r["comp"] for r in connected_components(e).collect()}
-    assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-    # symmetrized edges + initial labels + >=1 iteration materialization
-    assert len(calls) >= 3
+    assert comp == expect
+    assert len(calls) == 1
+    calls.clear()
+    monkeypatch.setattr(graph_algos, "DRIVER_CC_MAX_EDGES", 0)
+    with M.using_materializer(counting):
+        comp = {r["id"]: r["comp"] for r in connected_components(e).collect()}
+    assert comp == expect
+    # raw + symmetrized edges + initial labels + >=1 iteration
+    assert len(calls) >= 4
 
 
 def test_persist_disk_materializer_correct(spark):
@@ -67,8 +78,15 @@ def test_reliable_checkpoint_materializer(spark, tmp_path):
     assert [r["x"] for r in out.orderBy("id").collect()] == [i * 2 for i in range(10)]
 
 
-def _memstore_bytes(spark) -> int:
-    return spark.sparkContext._jsc.sc().env().blockManager().memoryStore().memoryUsed()
+def _held_bytes(spark, ck) -> int:
+    """MemoryStore bytes held by the blocks of ``ck``'s own checkpoint
+    RDD. Read per RDD, not as a MemoryStore total: in a full-suite run
+    the store also holds ~200 MB of other tests' broadcast blocks, which
+    the ContextCleaner frees asynchronously — a total dropped by 162 MB
+    across one checkpoint once, reading as a negative hold."""
+    rid = ck._jdf.queryExecution().analyzed().rdd().id()
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.memSize() for i in infos if i.id() == rid)
 
 
 def test_release_frees_local_checkpoint_blocks(spark):
@@ -76,18 +94,14 @@ def test_release_frees_local_checkpoint_blocks(spark):
     no-op on localCheckpoint blocks (they're RDD-level persisted, not
     CacheManager entries), so release() must unpersist the LogicalRDD's
     internal RDD — MemoryStore usage has to drop back to ~baseline."""
-    base = _memstore_bytes(spark)
     df = spark.range(200_000).selectExpr("id", "repeat(cast(id as string), 20) AS s")
     ck = M.local_checkpoint(df)
-    held = _memstore_bytes(spark) - base
+    held = _held_bytes(spark, ck)
     assert held > 1_000_000  # the checkpoint actually lives in the MemoryStore
     ck.unpersist()  # documented no-op for this strategy
-    # ≥90% rather than byte-equality: the shared session's async
-    # ContextCleaner can evict unrelated tests' blocks between the two
-    # MemoryStore samples (flaked once at ~1% drift on a full-suite run)
-    assert _memstore_bytes(spark) - base > held * 0.9
+    assert _held_bytes(spark, ck) > held * 0.9
     M.release(ck, blocking=True)
-    assert _memstore_bytes(spark) - base < held // 10
+    assert _held_bytes(spark, ck) < held // 10
 
 
 def test_release_uncaches_persist_disk(spark):
@@ -104,32 +118,30 @@ def test_release_is_deferred_one_generation(spark):
     until a LATER materialize (started after the release) completes —
     a frame read by anything still in flight at release time keeps its
     blocks for a full extra job. blocking=True stays immediate."""
-    base = _memstore_bytes(spark)
     ck = M.local_checkpoint(
         spark.range(200_000).selectExpr("id", "repeat(cast(id as string), 20) AS s")
     )
-    held = _memstore_bytes(spark) - base
+    held = _held_bytes(spark, ck)
     assert held > 1_000_000
     M.release(ck)  # queued, not dropped
-    assert _memstore_bytes(spark) - base > held * 0.9
+    assert _held_bytes(spark, ck) > held * 0.9
     # the frame is still fully readable in this generation
     assert ck.count() == 200_000
     # a materialize that STARTED after the release drains it
     nxt = M.materialize(spark.range(10).selectExpr("id"))
-    assert _memstore_bytes(spark) - base < held // 10
+    assert _held_bytes(spark, ck) < held // 10
     M.release(nxt, blocking=True)
 
 
 def test_flush_releases_drains_queue(spark):
-    base = _memstore_bytes(spark)
     ck = M.local_checkpoint(
         spark.range(200_000).selectExpr("id", "repeat(cast(id as string), 20) AS s")
     )
-    held = _memstore_bytes(spark) - base
+    held = _held_bytes(spark, ck)
     M.release(ck)
-    assert _memstore_bytes(spark) - base > held * 0.9
+    assert _held_bytes(spark, ck) > held * 0.9
     M.flush_releases()
-    assert _memstore_bytes(spark) - base < held // 10
+    assert _held_bytes(spark, ck) < held // 10
 
 
 def test_release_is_safe_on_plain_frames(spark):
@@ -179,22 +191,28 @@ def test_iterative_release_bounds_storage(spark):
     M.release(cur)
 
 
-def test_connected_components_releases_iteration_frames(spark):
+def test_connected_components_releases_iteration_frames(spark, monkeypatch):
     """After CC returns, only the frame backing the result should remain
-    persisted — the symmetrized edge copy and every superseded iteration
-    frame are released inside the loop (pre-fix this left ~2+iterations
-    persisted RDDs behind per call)."""
+    persisted — on the loop the raw and symmetrized edge copies and
+    every superseded iteration frame are released inside the loop
+    (pre-fix this left ~2+iterations persisted RDDs behind per call);
+    the driver path returns a local frame and keeps nothing."""
+    from big_data___knowledge_graph_construction_with_llm_spark.operators import graph_algos
+
     sc = spark.sparkContext._jsc.sc()
-    base = len(sc.getRDDStorageInfo())
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(10)], "src long, dst long"
     )
-    labels = connected_components(e)
-    assert labels.filter(F.col("comp") != 0).count() == 0  # one 0-rooted chain
-    # deferred releases (r15) keep the tail frames queued until the next
-    # materialize; flush to assert the leak-free end state
-    M.flush_releases()
-    assert len(sc.getRDDStorageInfo()) - base <= 1  # just the result's frame
+    for bound, kept in ((graph_algos.DRIVER_CC_MAX_EDGES, 0), (0, 1)):
+        monkeypatch.setattr(graph_algos, "DRIVER_CC_MAX_EDGES", bound)
+        M.flush_releases()
+        base = len(sc.getRDDStorageInfo())
+        labels = connected_components(e)
+        assert labels.filter(F.col("comp") != 0).count() == 0  # one 0-rooted chain
+        # deferred releases (r15) keep the tail frames queued until the
+        # next materialize; flush to assert the leak-free end state
+        M.flush_releases()
+        assert len(sc.getRDDStorageInfo()) - base <= kept  # the result's frame
 
 
 def test_k_hop_releases_edge_copy_and_empty_probe(spark):

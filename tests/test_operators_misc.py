@@ -1,7 +1,7 @@
 """Tests for operators not exercised by the query registry: the
 two-table as-of join, emptiness guard, literal-map lookup, partitioned
 JSON sink, the gated RDF reader, and the equivalence of the column-form
-MinHash/SimHash signatures with their explode+aggregate twins.
+MinHash/SimHash signatures with their frame-form twins.
 """
 
 from __future__ import annotations
@@ -83,20 +83,33 @@ def test_rdf_reader_works_without_rdflib():
 
 
 def test_minhash_column_form_equals_agg_form(spark):
+    """The row-local Arrow kernel of minhash_signatures is bit-identical
+    to the JVM column form, at 16 and 64 hashes, including a NULL text
+    (it hashes as one NULL shingle), an empty and a one-token doc, and a
+    doc long enough to span thousands of shingles, over several
+    partitions."""
+    long_doc = " ".join(f"w{i % 97} x{i % 13}" for i in range(2000))
     df = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog"),
-         (2, "pack my box with five dozen liquor jugs")],
+         (2, "pack my box with five dozen liquor jugs"),
+         (3, None),
+         (4, "solitary"),
+         (5, ""),
+         (6, long_doc)],
         "doc_id int, text string",
-    )
-    col_form = df.select(
-        "doc_id", minhash_signature(shingles("text", 3), 16).alias("sig")
-    )
-    agg_form = minhash_signatures(df, "doc_id", "text", num_hashes=16)
-    a = {r["doc_id"]: list(r["sig"]) for r in col_form.collect()}
-    b = {
-        r["_id"]: [r[f"_m{i}"] for i in range(16)] for r in agg_form.collect()
-    }
-    assert a == b
+    ).repartition(3)
+    for num_hashes in (16, 64):
+        col_form = df.select(
+            "doc_id",
+            minhash_signature(shingles("text", 3), num_hashes).alias("sig"),
+        )
+        agg_form = minhash_signatures(df, "doc_id", "text", num_hashes=num_hashes)
+        a = {r["doc_id"]: list(r["sig"]) for r in col_form.collect()}
+        b = {
+            r["_id"]: [r[f"_m{i}"] for i in range(num_hashes)]
+            for r in agg_form.collect()
+        }
+        assert a == b and len(b) == 6
 
 
 def test_simhash_column_form_equals_agg_form(spark):

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -388,10 +389,18 @@ def test_k_hop_distances_matches_reference_bfs(spark, edges, k):
     )
 )
 @settings(**_SETTINGS)
-def test_connected_components_matches_union_find(spark, edges):
-    """Law: min-label propagation agrees with an in-memory union-find
-    (labels = component minimum) on every random graph."""
+@pytest.mark.parametrize("path", ["driver", "loop"])
+def test_connected_components_matches_union_find(spark, monkeypatch, path, edges):
+    """Law: both component paths — the driver-side union-find taken for
+    small edge lists and the min-label propagation loop taken above
+    ``DRIVER_CC_MAX_EDGES`` (forced here with the bound at 0) — agree
+    with an in-memory union-find (labels = component minimum) on every
+    random graph."""
+    from big_data___knowledge_graph_construction_with_llm_spark.operators import graph_algos
     from big_data___knowledge_graph_construction_with_llm_spark.operators.graph_algos import connected_components
+
+    if path == "loop":
+        monkeypatch.setattr(graph_algos, "DRIVER_CC_MAX_EDGES", 0)
 
     parent: dict[int, int] = {}
 

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import logging
 
+from py4j.protocol import Py4JError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -64,16 +65,10 @@ def _observed_long(obs: Observation, name: str, fallback) -> int:
             "observe metric %s not yet delivered; running fallback probe job",
             name,
         )
-    except Exception as exc:
-        # _jo/getOrEmpty gone (AttributeError: version drift), py4j
-        # transport errors (imported lazily by py4j, so matched on the
-        # module) and pyspark's own wrappers of either cost one probe;
-        # anything else is a real bug and surfaces
-        if not (
-            isinstance(exc, (AttributeError, PySparkException))
-            or type(exc).__module__.startswith("py4j")
-        ):
-            raise
+    except (AttributeError, Py4JError, PySparkException) as exc:
+        # _jo/getOrEmpty gone (version drift), py4j transport errors and
+        # pyspark's own wrappers of either cost one probe; anything else
+        # is a real bug and surfaces
         log.debug(
             "observe metric %s unreadable (%s); running fallback probe job",
             name,

@@ -120,9 +120,12 @@ def symmetrize(edges: DataFrame) -> DataFrame:
 
 
 #: Raw edge count at or below which :func:`connected_components` resolves
-#: on the driver: 1e5 ``(src, dst)`` tuples are a few MB of driver memory
-#: and a sub-second union-find, where the label-propagation loop pays
-#: several Spark jobs per iteration whatever the graph size.
+#: on the driver. A driver-memory cap, not a speed crossover: on a
+#: ``q_connected_components``-shaped graph (customers -> 25 nations,
+#: local[4]) the driver path beat the loop at every size measured —
+#: 1.7 s vs 2.9-3.7 s at 1e5 edges (collect 0.6 s, union-find 0.2 s,
+#: ``createDataFrame`` 0.3 s), 3.5-4.6 s vs 6.5-6.7 s at 3e5 — while its
+#: Python heap peaks at ~530 bytes per edge (53 MB at 1e5).
 DRIVER_CC_MAX_EDGES = 100_000
 
 

@@ -80,13 +80,22 @@ def test_reliable_checkpoint_materializer(spark, tmp_path):
 
 def _held_bytes(spark, ck) -> int:
     """MemoryStore bytes held by the blocks of ``ck``'s own checkpoint
-    RDD. Read per RDD, not as a MemoryStore total: in a full-suite run
-    the store also holds ~200 MB of other tests' broadcast blocks, which
-    the ContextCleaner frees asynchronously — a total dropped by 162 MB
-    across one checkpoint once, reading as a negative hold."""
-    rid = ck._jdf.queryExecution().analyzed().rdd().id()
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    return sum(i.memSize() for i in infos if i.id() == rid)
+    RDD, read from the store itself. Per RDD, not as a MemoryStore
+    total: in a full-suite run the store also holds ~200 MB of other
+    tests' broadcast blocks, which the ContextCleaner frees
+    asynchronously — a total dropped by 162 MB across one checkpoint
+    once, reading as a negative hold. Not through ``getRDDStorageInfo``
+    either: that filters on the driver's persistent-RDD map, which
+    ``unpersist`` clears before any block is freed, and reports sizes
+    the listener bus delivers late."""
+    rdd = ck._jdf.queryExecution().analyzed().rdd()
+    store = spark.sparkContext._jsc.sc().env().blockManager().memoryStore()
+    blocks = [
+        spark.sparkContext._jvm.org.apache.spark.storage.RDDBlockId(rdd.id(), p)
+        for p in range(rdd.getNumPartitions())
+    ]
+    # getSize throws on an absent block
+    return sum(store.getSize(b) for b in blocks if store.contains(b))
 
 
 def test_release_frees_local_checkpoint_blocks(spark):
@@ -113,11 +122,22 @@ def test_release_uncaches_persist_disk(spark):
     assert not out.storageLevel.useDisk and not out.storageLevel.useMemory
 
 
-def test_release_is_deferred_one_generation(spark):
+def test_release_is_deferred_one_generation(spark, monkeypatch):
     """The r15 race fix: release(blocking=False) must NOT drop blocks
     until a LATER materialize (started after the release) completes —
     a frame read by anything still in flight at release time keeps its
-    blocks for a full extra job. blocking=True stays immediate."""
+    blocks for a full extra job. blocking=True stays immediate. That
+    materialize drains with a blocking unpersist, so the blocks are gone
+    when it returns; the spy pins that, since a non-blocking removal
+    usually wins the race against the store read on an idle host."""
+    drained = []
+    unpersist_now = M._unpersist_now
+
+    def spy(df, blocking):
+        drained.append(blocking)
+        unpersist_now(df, blocking)
+
+    monkeypatch.setattr(M, "_unpersist_now", spy)
     ck = M.local_checkpoint(
         spark.range(200_000).selectExpr("id", "repeat(cast(id as string), 20) AS s")
     )
@@ -129,6 +149,7 @@ def test_release_is_deferred_one_generation(spark):
     assert ck.count() == 200_000
     # a materialize that STARTED after the release drains it
     nxt = M.materialize(spark.range(10).selectExpr("id"))
+    assert drained and all(drained)
     assert _held_bytes(spark, ck) < held // 10
     M.release(nxt, blocking=True)
 

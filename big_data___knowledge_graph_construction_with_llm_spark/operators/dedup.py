@@ -6,10 +6,16 @@ near-dup family (MinHash+LSH, SimHash, n-gram Jaccard) is the 100 TB
 extension. Hashing, shingling and verification are built-in functions —
 ``xxhash64``, higher-order array functions, ``array_intersect`` — so
 they stay in the JVM / whole-stage codegen. The one Python leg is the
-MinHash minima of :func:`minhash_signatures`: a single Arrow-batched
-``mapInArrow`` kernel (numpy over list offsets, no per-row Python), so
-signatures need no shuffle. No row-at-a-time Python UDFs anywhere in
-this module.
+MinHash minima of :func:`_sign`: a single Arrow-batched ``mapInArrow``
+kernel (numpy over list offsets, no per-row Python), so signatures need
+no shuffle. No row-at-a-time Python UDFs anywhere in this module.
+
+Each kernel has one implementation, shared by the batch path and the
+at-rest near-dup store: :func:`_sign` signs text-derived and
+store-derived hash arrays alike, :func:`_set_jaccard` verifies over
+shingle strings or their stored fingerprints, :func:`_self_pairs` and
+:func:`_cross_from_sides` are the only bucket joins, and
+:func:`_excise_units` is the one token/line excision rebuild.
 """
 
 from __future__ import annotations
@@ -63,7 +69,6 @@ def exact_dedup_by_hash(
     text_col: str,
     id_col: str,
     normalize: bool = False,
-    strategy: str = "group",
 ) -> DataFrame:
     """Keep one representative (min id) per distinct text.
 
@@ -76,22 +81,13 @@ def exact_dedup_by_hash(
     at-rest store uses, so a full-corpus pass and append-batch dedup
     can never disagree.
 
-    ``strategy`` picks the shuffle shape (VERDICT r10 #3 — the r10
-    plan's shuffle grew 280x at 100x rows):
+    Shape: ONE hash exchange of the rows keyed by the fingerprint,
+    ``min_by`` keeping the min-id row per group — shuffle volume ≈ input
+    at every scale (map-side partial aggregation trims it further where
+    duplicates co-locate), and no join to turn into a sort-merge of the
+    corpus past the broadcast threshold.
 
-    - ``'group'`` (default): ONE hash exchange of the rows keyed by the
-      fingerprint, ``min_by`` keeping the min-id row per group — shuffle
-      volume ≈ input at EVERY scale (map-side partial aggregation
-      trims it further where duplicates co-locate), no joins, no plan
-      cliff. The scalable full-pass shape.
-    - ``'semi'``: fingerprints aggregate to a keep-id set that
-      left-semi-joins back on the id. Near-ZERO row movement while the
-      keep set broadcasts (small corpora), but past the broadcast
-      threshold AQE switches to a sort-merge join that shuffles AND
-      sorts both the corpus and the keep set (~2-3x input) — the
-      measured 280x ratio cliff. Kept for broadcast-sized inputs.
-
-    Steady state at 100 TB should not run EITHER full pass per batch:
+    Steady state at 100 TB should not run a full pass per batch:
     dedup appends against the at-rest fingerprint store
     (:func:`incremental_dedup`), which never re-reads or re-shuffles
     the corpus.
@@ -100,25 +96,15 @@ def exact_dedup_by_hash(
     instead of the raw bytes (fuzzy-exact dedup — reformatted copies
     collapse); survivors keep their ORIGINAL text.
     """
-    if strategy == "group":
-        t = dedup_normal_form(text_col) if normalize else F.col(text_col)
-        keyed = df.withColumn("_h64", F.xxhash64(t)).withColumn(
-            "_h128", F.md5(t.cast("string"))
-        )
-        return (
-            keyed.groupBy("_h64", "_h128")
-            .agg(
-                F.min_by(
-                    F.struct(*df.columns), F.col(id_col)
-                ).alias("_keep")
-            )
-            .select("_keep.*")
-        )
-    if strategy != "semi":
-        raise ValueError(f"unknown dedup strategy {strategy!r}")
-    h = content_fingerprints(df, text_col, id_col, normalize=normalize)
-    keep = h.groupBy("_h64", "_h128").agg(F.min(id_col).alias(id_col))
-    return df.join(keep, id_col, "left_semi")
+    t = dedup_normal_form(text_col) if normalize else F.col(text_col)
+    keyed = df.withColumn("_h64", F.xxhash64(t)).withColumn(
+        "_h128", F.md5(t.cast("string"))
+    )
+    return (
+        keyed.groupBy("_h64", "_h128")
+        .agg(F.min_by(F.struct(*df.columns), F.col(id_col)).alias("_keep"))
+        .select("_keep.*")
+    )
 
 
 def shingles(text_col: str, n: int = 3) -> F.Column:
@@ -203,6 +189,14 @@ def minhash_signatures(
             lambda s: F.pmod(F.xxhash64(s), F.lit(_P31)),
         ).alias("_h"),
     )
+    return _sign(hashes, num_hashes, seed)
+
+
+def _sign(hashes: DataFrame, num_hashes: int, seed: int) -> DataFrame:
+    """MinHash signatures ``(_id, _m0.._m{n-1})`` of an ``(_id, _h)``
+    frame of per-doc shingle-hash arrays (values in ``[0, P31)``) — the
+    one signing kernel behind :func:`minhash_signatures` and the
+    near-dup store."""
     schema = T.StructType(
         [hashes.schema["_id"]]
         + [T.StructField(f"_m{i}", T.LongType()) for i in range(num_hashes)]
@@ -350,13 +344,28 @@ def lsh_candidate_pairs(
             f"bands ({bands}) must divide num_hashes ({num_hashes}); a remainder "
             "would silently drop signature columns and change LSH recall"
         )
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n=shingle_n)
+    # a NULL text shingles to [NULL]: every NULL-text doc would share one
+    # signature and pair with every other in all bands, and the verify
+    # can never confirm such a pair
+    sig = minhash_signatures(
+        df.filter(F.col(text_col).isNotNull()),
+        id_col,
+        text_col,
+        num_hashes,
+        shingle_n=shingle_n,
+    )
     # materialized ONCE: the banded frame feeds the cap census and BOTH
     # sides of the self-join — lazily, the whole shingle→hash→signature
     # pipeline would re-run once per consumer (3x with a cap; measured
     # on the physical plan). Same pattern as decontaminate's raw_banded.
     banded = materialize(_banded(sig, num_hashes, bands))
-    banded = _cap_buckets(banded, max_bucket, ["band", "bucket"])
+    return _self_pairs(_cap_buckets(banded, max_bucket, ["band", "bucket"]))
+
+
+def _self_pairs(banded: DataFrame) -> DataFrame:
+    """Candidate pairs WITHIN one ``(_id, band, bucket)`` table: its
+    self-equi-join on ``(band, bucket)`` as distinct ``(id_a, id_b)``
+    with ``id_a < id_b``."""
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -417,7 +426,7 @@ def decontaminate(
         ),
         F.col(text_col),
     )
-    both_docs = corpus.unionByName(bench)
+    both_docs = corpus.unionByName(bench).filter(F.col(text_col).isNotNull())
     # ONE signature pipeline over the union (one codegen unit, one pass).
     # With a skew cap it is materialized HERE — before the cap split —
     # because the oversize census, blind-spot accounting AND the
@@ -524,25 +533,19 @@ def decontaminate(
 
 
 def _cross_from_sides(bench_side: DataFrame, corpus_side: DataFrame) -> DataFrame:
-    """CROSS-dataset candidate pairs: benchmark × corpus on the
-    (band, bucket) key — never a self-join of the union, so no
-    corpus×corpus candidate is ever produced (at 10⁹ docs that
+    """CROSS-dataset candidate pairs between two ``(_id, band, bucket)``
+    tables on the (band, bucket) key — benchmark × corpus in
+    :func:`decontaminate`, store × batch in
+    :func:`incremental_near_dedup`; never a self-join of the union, so
+    no corpus×corpus candidate is ever produced (at 10⁹ docs that
     difference is the whole cost). Plan-pinned in
     ``tests/test_plans.py::test_decontaminate_is_cross_dataset_only``.
-    Output: ``(id_a=benchmark id, id_b=corpus id)``, distinct."""
+    Output: ``(id_a=bench_side id, id_b=corpus_side id)``, distinct."""
     return (
         bench_side.withColumnRenamed("_id", "_bid")
         .join(corpus_side, ["band", "bucket"])
         .select(F.col("_bid").alias("id_a"), F.col("_id").alias("id_b"))
         .distinct()
-    )
-
-
-def _cross_candidates(banded: DataFrame) -> DataFrame:
-    """``_cross_from_sides`` over one banded table whose benchmark rows
-    carry negative ids (the sign IS the dataset tag)."""
-    return _cross_from_sides(
-        banded.filter(F.col("_id") < 0), banded.filter(F.col("_id") >= 0)
     )
 
 
@@ -587,13 +590,25 @@ def ngram_jaccard_pairs(
             .distinct()
         )
         base = base.join(ids, "_id", "left_semi")
-    sh = base.select(
-        "_id", F.array_distinct(shingles(text_col, shingle_n)).alias("_sh")
+    return _set_jaccard(
+        p,
+        base.select(
+            "_id", F.array_distinct(shingles(text_col, shingle_n)).alias("_sh")
+        ),
     )
+
+
+def _set_jaccard(pairs: DataFrame, sets: DataFrame) -> DataFrame:
+    """The verify body shared by :func:`ngram_jaccard_pairs` and the
+    near-dup store: Jaccard of ``(id_a, id_b)`` pairs over an
+    ``(_id, set)`` frame of per-doc distinct-element arrays (shingle
+    strings, or their 64-bit fingerprints), zero-intersection pairs
+    dropped."""
+    _, col = sets.columns
     inter = F.size(F.array_intersect("_sa", "_sb"))
     return (
-        p.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sa")), "id_a")
-        .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_sb")), "id_b")
+        pairs.join(sets.select(F.col("_id").alias("id_a"), F.col(col).alias("_sa")), "id_a")
+        .join(sets.select(F.col("_id").alias("id_b"), F.col(col).alias("_sb")), "id_b")
         .select("id_a", "id_b", inter.alias("_inter"), "_sa", "_sb")
         .filter(F.col("_inter") > 0)
         .select(
@@ -862,64 +877,36 @@ def incremental_dedup(
 def _shingle_fps(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> DataFrame:
-    """Per-doc DISTINCT shingle fingerprints ``(_id, _sf)`` — the
-    text-free representation the incremental near-dup store persists:
-    enough to recompute MinHash signatures (:func:`_sigs_from_fps`) AND
-    to verify exact Jaccard (:func:`_jaccard_from_fps`) without ever
-    re-reading document text."""
-    return df.select(
+    """Per-doc DISTINCT shingle fingerprints ``(_id, _sf array<bigint>)``
+    — the text-free representation the incremental near-dup store
+    persists, one row per doc: ``pmod(_sf, P31)`` is exactly the hash
+    array :func:`minhash_signatures` signs (min over the distinct set
+    equals min over the multiset), and :func:`_set_jaccard` over ``_sf``
+    is :func:`ngram_jaccard_pairs` with each shingle string replaced by
+    its 64-bit fingerprint (a cross-doc fingerprint collision inflating
+    an intersection is a ~n²/2⁶⁴ per-pair event, negligible at per-doc
+    set sizes). NULL-text docs are dropped, as the text path drops
+    them."""
+    return df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
-        F.explode(F.array_distinct(shingles(text_col, shingle_n))).alias("_s"),
-    ).select("_id", F.xxhash64("_s").alias("_sf"))
-
-
-def _sigs_from_fps(shfps: DataFrame, num_hashes: int, seed: int = 7) -> DataFrame:
-    """MinHash signatures from a shingle-fingerprint table — IDENTICAL
-    output to :func:`minhash_signatures` on the source text (same hash
-    family over ``xxhash64(shingle)``; min over the distinct set equals
-    min over the multiset), so store-derived and text-derived
-    signatures band into the same buckets."""
-    h = shfps.select("_id", F.pmod("_sf", F.lit(_P31)).alias("_h"))
-    aggs = [
-        F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), F.lit(_P31))).alias(
-            f"_m{i}"
-        )
-        for i, (a, b) in enumerate(_lcg_params(num_hashes, seed))
-    ]
-    return h.groupBy("_id").agg(*aggs)
-
-
-def _jaccard_from_fps(shfps: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact Jaccard for candidate ``(id_a, id_b)`` pairs over hashed
-    shingle sets — :func:`ngram_jaccard_pairs` without the text (the
-    64-bit fingerprint stands in for the shingle string; a cross-doc
-    fingerprint collision inflating the intersection is a ~n²/2⁶⁴
-    per-pair event, negligible at per-doc set sizes)."""
-    sizes = shfps.groupBy("_id").agg(F.count("*").alias("_n"))
-    fa = shfps.select(F.col("_id").alias("id_a"), "_sf")
-    fb = shfps.select(F.col("_id").alias("id_b"), "_sf")
-    inter = (
-        pairs.join(fa, "id_a")
-        .join(fb, ["id_b", "_sf"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("_inter"))
+        F.transform(
+            F.array_distinct(shingles(text_col, shingle_n)), lambda x: F.xxhash64(x)
+        ).alias("_sf"),
     )
-    return (
-        inter.join(
-            sizes.withColumnRenamed("_id", "id_a").withColumnRenamed("_n", "_na"),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed("_id", "id_b").withColumnRenamed("_n", "_nb"),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (F.col("_inter") / (F.col("_na") + F.col("_nb") - F.col("_inter"))).alias(
-                "jaccard"
-            ),
-        )
+
+
+def _store_banded(
+    shfps: DataFrame, num_hashes: int, bands: int, seed: int, max_bucket: int | None
+) -> DataFrame:
+    """``(_id, band, bucket)`` rows of a shingle-fingerprint frame, signed
+    by the same kernel as the text path and bucket-capped."""
+    hashes = shfps.select(
+        "_id", F.transform("_sf", lambda h: F.pmod(h, F.lit(_P31))).alias("_h")
+    )
+    return _cap_buckets(
+        _banded(_sign(hashes, num_hashes, seed), num_hashes, bands),
+        max_bucket,
+        ["band", "bucket"],
     )
 
 
@@ -940,13 +927,17 @@ def near_dup_store(
     ever; every append bands against the stored buckets and verifies
     against the stored shingle fingerprints.
 
-    - ``banded``: ``(_id, band, bucket)`` — persist it partitioned (or
-      bucketed) by ``(band, bucket)`` so an append's candidate join
-      prunes to matching buckets instead of scanning the store.
-    - ``shingle_fps``: ``(_id, _sf)`` — ~8 bytes per distinct shingle
-      per doc; bucket by ``_id`` at rest so the verify stage's
+    - ``banded``: ``(_id, band, bucket)`` — the rows
+      :func:`lsh_candidate_pairs` bands the same text into; persist it
+      partitioned (or bucketed) by ``(band, bucket)`` so an append's
+      candidate join prunes to matching buckets instead of scanning the
+      store.
+    - ``shingle_fps``: ``(_id, _sf array<bigint>)`` — one row per doc,
+      its distinct shingles' xxhash64 values (~8 bytes per distinct
+      shingle); bucket by ``_id`` at rest so the verify stage's
       semi-join prunes.
 
+    NULL-text docs get no store rows (they can match nothing).
     ``max_bucket`` caps pathological buckets AT BUILD (dropped from the
     at-rest banding — the oversize-bucket recall trade documented on
     ``_cap_buckets``). Appends cap their own buckets per batch; a
@@ -958,12 +949,7 @@ def near_dup_store(
             f"bands ({bands}) must divide num_hashes ({num_hashes})"
         )
     shfps = _shingle_fps(df, id_col, text_col, shingle_n)
-    banded = _cap_buckets(
-        _banded(_sigs_from_fps(shfps, num_hashes, seed), num_hashes, bands),
-        max_bucket,
-        ["band", "bucket"],
-    )
-    return banded, shfps
+    return _store_banded(shfps, num_hashes, bands, seed, max_bucket), shfps
 
 
 def incremental_near_dedup(
@@ -988,6 +974,10 @@ def incremental_near_dedup(
     text is never re-read, and per-append work is batch-sized (plus the
     bucket-pruned store joins). Returns ``(new_rows, new_banded,
     new_shfps)`` — survivors and exactly their store rows to append.
+    ``new_rows`` is materialized (the other two are semi-joins of
+    materialized batch frames against it), so collecting any of the
+    three, or chaining the next append onto them, never re-runs this
+    append's candidate, verify and component plan.
 
     Keep semantics (STORE WINS, then family collapse): a batch doc
     verified ≥ ``threshold`` against ANY store doc is dropped, and so is
@@ -998,7 +988,8 @@ def incremental_near_dedup(
     that only exist across MULTIPLE appends (A lands today, B≈A
     tomorrow, C≈B next week with C≉B's stored family member) resolve
     per-append — the documented divergence from a monolithic full pass,
-    same as any streaming near-dedup.
+    same as any streaming near-dedup. A NULL-text batch doc matches
+    nothing and survives, as in :func:`semantic_dedup`.
 
     Parameters must match the store's build (hash family, bands,
     shingle_n — they define the store, like ``normalize`` does for the
@@ -1014,41 +1005,20 @@ def incremental_near_dedup(
         )
     b_shfps = materialize(_shingle_fps(batch, id_col, text_col, shingle_n))
     banded_b = materialize(
-        _cap_buckets(
-            _banded(_sigs_from_fps(b_shfps, num_hashes, seed), num_hashes, bands),
-            max_bucket,
-            ["band", "bucket"],
-        )
+        _store_banded(b_shfps, num_hashes, bands, seed, max_bucket)
     )
-    # candidates: batch × store on the bucket key (cross-dataset — the
+    # candidates: store × batch on the bucket key (cross-dataset — the
     # store never self-joins), plus batch-internal pairs
-    cross = (
-        banded_b.withColumnRenamed("_id", "_bid")
-        .join(store_banded, ["band", "bucket"])
-        .select(F.col("_id").alias("id_a"), F.col("_bid").alias("id_b"))
-        .distinct()
-    )
-    a = banded_b.alias("a")
-    b = banded_b.alias("b")
-    self_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
-        .distinct()
-    )
+    cross = _cross_from_sides(store_banded, banded_b)
     # verify: store side pruned to candidate ids before its fps move
     store_cand_fps = store_shfps.join(
         cross.select(F.col("id_a").alias("_id")).distinct(), "_id", "left_semi"
     )
-    v_cross = _jaccard_from_fps(
-        b_shfps.unionByName(store_cand_fps), cross
-    ).filter(F.col("jaccard") >= threshold)
+    v_cross = _set_jaccard(cross, b_shfps.unionByName(store_cand_fps)).filter(
+        F.col("jaccard") >= threshold
+    )
     v_self = materialize(
-        _jaccard_from_fps(b_shfps, self_pairs).filter(
+        _set_jaccard(_self_pairs(banded_b), b_shfps).filter(
             F.col("jaccard") >= threshold
         )
     )
@@ -1073,8 +1043,10 @@ def incremental_near_dedup(
     clean_pairs = v_self.join(
         tainted.withColumnRenamed(id_col, "id_a"), "id_a", "left_anti"
     ).join(tainted.withColumnRenamed(id_col, "id_b"), "id_b", "left_anti")
-    new_rows = keep_min_id_per_component(
-        clean, clean_pairs, id_col, max_iter=max_iter, strict=strict
+    new_rows = materialize(
+        keep_min_id_per_component(
+            clean, clean_pairs, id_col, max_iter=max_iter, strict=strict
+        )
     )
     keep_ids = new_rows.select(F.col(id_col).alias("_id"))
     new_banded = banded_b.join(keep_ids, "_id", "left_semi")
@@ -1158,10 +1130,7 @@ def _doc_spans(
     if sample_mod < 1:
         raise ValueError("sample_mod must be >= 1")
     spans = (
-        df.filter(F.trim(F.col(text_col)) != "")
-        .filter(
-            F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= span_tokens
-        )
+        _span_docs(df, text_col, span_tokens)
         .select(
             F.col(id_col),
             F.explode(F.array_distinct(shingles(text_col, span_tokens))).alias("_s"),
@@ -1176,6 +1145,99 @@ def _doc_spans(
     if sample_mod > 1:
         spans = spans.filter(F.pmod("_sh64", F.lit(sample_mod)) == 0)
     return spans
+
+
+def _span_docs(df: DataFrame, text_col: str, span_tokens: int) -> DataFrame:
+    """The docs that have a ``span_tokens``-token span: non-blank and at
+    least that many tokens long (see :func:`_doc_spans`)."""
+    return df.filter(F.trim(F.col(text_col)) != "").filter(
+        F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= span_tokens
+    )
+
+
+def _pos_spans(
+    df: DataFrame, id_col: str, text_col: str, span_tokens: int
+) -> DataFrame:
+    """POSITIONAL span frame for excision: ``(id, pos, _sh64, _sh128)``,
+    one row per span start (NOT distinct — positions matter here)."""
+    return (
+        _span_docs(df, text_col, span_tokens)
+        .select(
+            F.col(id_col),
+            F.posexplode(shingles(text_col, span_tokens)).alias("pos", "_s"),
+        )
+        .select(
+            id_col,
+            "pos",
+            F.xxhash64("_s").alias("_sh64"),
+            F.md5("_s").alias("_sh128"),
+        )
+    )
+
+
+def _covered(
+    pos_spans: DataFrame, hit_fps: DataFrame, id_col: str, span_tokens: int
+) -> DataFrame:
+    """Token positions covered by at least one repeated span, as the
+    ``(_rm_id, _rm_pos)`` removal frame :func:`_excise_units` takes."""
+    return (
+        pos_spans.join(hit_fps, ["_sh64", "_sh128"], "left_semi")
+        .select(
+            F.col(id_col).alias("_rm_id"),
+            F.explode(
+                F.sequence(F.col("pos"), F.col("pos") + span_tokens - 1)
+            ).alias("_rm_pos"),
+        )
+        .distinct()
+    )
+
+
+def _excise_units(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    removed: DataFrame,
+    units: F.Column,
+    sep: str,
+) -> DataFrame:
+    """The one rebuild of the excision family: rewrite ``text_col`` of
+    every doc in ``removed`` ``(_rm_id, _rm_pos)`` without those unit
+    positions, where ``units`` splits the text into positional units
+    (tokens or lines) and ``sep`` joins the survivors back. Only the
+    AFFECTED docs' units shuffle; the rest pass through by id join,
+    text unmoved. A doc with every unit removed becomes an empty
+    string, kept so the caller decides whether to drop it."""
+    # disjoint column names on `removed`: both sides of the anti-join
+    # below descend from `df`, and same-named columns across a
+    # self-join lineage trip Spark's ambiguity check
+    affected = removed.select(F.col("_rm_id").alias(id_col)).distinct()
+    unit_pos = df.join(affected, id_col, "left_semi").select(
+        F.col(id_col), F.posexplode(units).alias("pos", "_unit")
+    )
+    kept = unit_pos.join(
+        removed,
+        (unit_pos[id_col] == removed["_rm_id"])
+        & (unit_pos["pos"] == removed["_rm_pos"]),
+        "left_anti",
+    )
+    rebuilt = affected.join(
+        kept.groupBy(id_col).agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "_unit"))),
+                    lambda s: s["_unit"],
+                ),
+                sep,
+            ).alias("_new_text")
+        ),
+        id_col,
+        "left",
+    ).select(id_col, F.coalesce("_new_text", F.lit("")).alias("_new_text"))
+    return (
+        df.join(rebuilt, id_col, "left")
+        .withColumn(text_col, F.coalesce("_new_text", F.col(text_col)))
+        .drop("_new_text")
+    )
 
 
 def _require_min_docs(min_docs: int) -> None:
@@ -1396,68 +1458,13 @@ def excise_repeated_spans(
             df, id_col, text_col, span_tokens, min_docs
         )
     )
-
-    # positional span frame (NOT distinct — positions matter here)
-    pos_spans = (
-        df.filter(F.trim(F.col(text_col)) != "")
-        .filter(F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= span_tokens)
-        .select(
-            F.col(id_col),
-            F.posexplode(shingles(text_col, span_tokens)).alias("pos", "_s"),
-        )
-        .select(
-            id_col,
-            "pos",
-            F.xxhash64("_s").alias("_sh64"),
-            F.md5("_s").alias("_sh128"),
-        )
-    )
-    # disjoint column names on the covered frame: both sides of the
-    # anti-join below descend from `df`, and same-named columns across
-    # a self-join lineage trip Spark's ambiguity check
     covered = materialize(
-        pos_spans.join(hit_fps, ["_sh64", "_sh128"], "left_semi")
-        .select(
-            F.col(id_col).alias("_cov_id"),
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + span_tokens - 1)
-            ).alias("_cov"),
-        )
-        .distinct()
-    )
-    affected = covered.select(F.col("_cov_id").alias(id_col)).distinct()
-    tokpos = (
-        df.join(affected, id_col, "left_semi")
-        .select(
-            F.col(id_col),
-            F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias(
-                "pos", "_tok"
-            ),
+        _covered(
+            _pos_spans(df, id_col, text_col, span_tokens), hit_fps, id_col, span_tokens
         )
     )
-    kept = tokpos.join(
-        covered,
-        (tokpos[id_col] == covered["_cov_id"])
-        & (tokpos["pos"] == covered["_cov"]),
-        "left_anti",
-    )
-    rebuilt = affected.join(
-        kept.groupBy(id_col).agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "_tok"))),
-                    lambda s: s["_tok"],
-                ),
-                " ",
-            ).alias("_new_text")
-        ),
-        id_col,
-        "left",
-    ).select(id_col, F.coalesce("_new_text", F.lit("")).alias("_new_text"))
-    return (
-        df.join(rebuilt, id_col, "left")
-        .withColumn(text_col, F.coalesce("_new_text", F.col(text_col)))
-        .drop("_new_text")
+    return _excise_units(
+        df, id_col, text_col, covered, F.split(F.trim(F.col(text_col)), r"\s+"), " "
     )
 
 
@@ -1493,22 +1500,7 @@ def scrub_repeated_spans(
     scrubbed text are wanted (``q_token_count``'s shape); keep the
     standalone operators when only one is."""
     _require_min_docs(min_docs)
-    pos_spans = materialize(
-        df.filter(F.trim(F.col(text_col)) != "")
-        .filter(
-            F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= span_tokens
-        )
-        .select(
-            F.col(id_col),
-            F.posexplode(shingles(text_col, span_tokens)).alias("pos", "_s"),
-        )
-        .select(
-            id_col,
-            "pos",
-            F.xxhash64("_s").alias("_sh64"),
-            F.md5("_s").alias("_sh128"),
-        )
-    )
+    pos_spans = materialize(_pos_spans(df, id_col, text_col, span_tokens))
     hit_marks = materialize(
         pos_spans.groupBy("_sh64", "_sh128")
         .agg(F.countDistinct(id_col).alias("_nd"))
@@ -1537,46 +1529,15 @@ def scrub_repeated_spans(
     # distinct and the kept anti-join) recompute it cheaply from the
     # two materialized inputs above, while checkpointing the 8x
     # position-exploded frame was measured ~1.8s slower at sf0.1
-    covered = (
-        pos_spans.join(hit_marks, ["_sh64", "_sh128"], "left_semi")
-        .select(
-            F.col(id_col).alias("_cov_id"),
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + span_tokens - 1)
-            ).alias("_cov"),
-        )
-        .distinct()
-    )
-    affected = covered.select(F.col("_cov_id").alias(id_col)).distinct()
-    tokpos = df.join(affected, id_col, "left_semi").select(
-        F.col(id_col),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias(
-            "pos", "_tok"
-        ),
-    )
-    kept = tokpos.join(
-        covered,
-        (tokpos[id_col] == covered["_cov_id"])
-        & (tokpos["pos"] == covered["_cov"]),
-        "left_anti",
-    )
-    rebuilt = affected.join(
-        kept.groupBy(id_col).agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "_tok"))),
-                    lambda s: s["_tok"],
-                ),
-                " ",
-            ).alias("_new_text")
-        ),
-        id_col,
-        "left",
-    ).select(id_col, F.coalesce("_new_text", F.lit("")).alias("_new_text"))
     return (
-        df.join(rebuilt, id_col, "left")
-        .withColumn(text_col, F.coalesce("_new_text", F.col(text_col)))
-        .drop("_new_text")
+        _excise_units(
+            df,
+            id_col,
+            text_col,
+            _covered(pos_spans, hit_marks, id_col, span_tokens),
+            F.split(F.trim(F.col(text_col)), r"\s+"),
+            " ",
+        )
         .join(frac, id_col, "left")
         .withColumn(
             "boilerplate_frac",
@@ -1658,41 +1619,13 @@ def excise_repeated_lines(
         .filter(F.col("_nd") >= min_docs)
         .select("_lh64", "_lh128")
     )
-    lines = _doc_lines(df, id_col, text_col)
-    # disjoint names: every frame below descends from `df` (see
-    # excise_repeated_spans for the ambiguity rationale)
     marked = materialize(
-        lines.join(hit_fps, ["_lh64", "_lh128"], "left_semi")
-        .select(F.col(id_col).alias("_hit_id"), F.col("pos").alias("_hit_pos"))
+        _doc_lines(df, id_col, text_col)
+        .join(hit_fps, ["_lh64", "_lh128"], "left_semi")
+        .select(F.col(id_col).alias("_rm_id"), F.col("pos").alias("_rm_pos"))
     )
-    affected = marked.select(F.col("_hit_id").alias(id_col)).distinct()
-    doc_lines = df.join(affected, id_col, "left_semi").select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "_line"),
-    )
-    kept = doc_lines.join(
-        marked,
-        (doc_lines[id_col] == marked["_hit_id"])
-        & (doc_lines["pos"] == marked["_hit_pos"]),
-        "left_anti",
-    )
-    rebuilt = affected.join(
-        kept.groupBy(id_col).agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "_line"))),
-                    lambda s: s["_line"],
-                ),
-                "\n",
-            ).alias("_new_text")
-        ),
-        id_col,
-        "left",
-    ).select(id_col, F.coalesce("_new_text", F.lit("")).alias("_new_text"))
-    return (
-        df.join(rebuilt, id_col, "left")
-        .withColumn(text_col, F.coalesce("_new_text", F.col(text_col)))
-        .drop("_new_text")
+    return _excise_units(
+        df, id_col, text_col, marked, F.split(F.col(text_col), "\n"), "\n"
     )
 
 

@@ -1432,13 +1432,13 @@ def test_incremental_near_dedup_store_semantics(spark):
 
 
 def test_store_signatures_equal_text_signatures(spark):
-    """The store's signature derivation (from shingle fingerprints) is
-    bit-identical to minhash_signatures over the text — so store and
-    batch band into the same buckets."""
+    """The store's banding (signed from its shingle fingerprints) is
+    identical to banding minhash_signatures over the text — so store
+    and batch band into the same buckets."""
     from big_data___knowledge_graph_construction_with_llm_spark.operators.dedup import (
-        _shingle_fps,
-        _sigs_from_fps,
+        _banded,
         minhash_signatures,
+        near_dup_store,
     )
 
     df = spark.createDataFrame(
@@ -1449,15 +1449,34 @@ def test_store_signatures_equal_text_signatures(spark):
         ],
         "doc_id long, text string",
     )
-    from_text = {
-        r["_id"]: tuple(r[f"_m{i}"] for i in range(64))
-        for r in minhash_signatures(df, "doc_id", "text", 64).collect()
-    }
-    from_store = {
-        r["_id"]: tuple(r[f"_m{i}"] for i in range(64))
-        for r in _sigs_from_fps(_shingle_fps(df, "doc_id", "text", 3), 64).collect()
-    }
-    assert from_text == from_store
+    from_text = sorted(
+        map(tuple, _banded(minhash_signatures(df, "doc_id", "text", 64), 64, 16).collect())
+    )
+    banded, _ = near_dup_store(df, "doc_id", "text")
+    assert sorted(map(tuple, banded.collect())) == from_text
+    assert len(from_text) == 3 * 16
+
+
+def test_null_text_docs_make_no_lsh_candidates(spark):
+    """A NULL text shingles to [NULL], one shared signature: NULL-text
+    docs must not pair with each other in LSH, and semantic_dedup keeps
+    every one of them (the verify could never confirm such a pair)."""
+    from big_data___knowledge_graph_construction_with_llm_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        semantic_dedup,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog again and again ok"
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, None), (4, None), (5, base), (6, base + " x1")],
+        "doc_id long, text string",
+    )
+    pairs = [(r["id_a"], r["id_b"]) for r in lsh_candidate_pairs(df, "doc_id", "text").collect()]
+    assert pairs == [(5, 6)]
+    kept = sorted(
+        r["doc_id"] for r in semantic_dedup(df, "doc_id", "text", threshold=0.5).collect()
+    )
+    assert kept == [1, 2, 3, 4, 5]
 
 
 def test_scrub_repeated_spans_matches_standalone_pair(spark):

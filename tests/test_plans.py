@@ -132,7 +132,7 @@ def test_decontaminate_is_cross_dataset_only(spark):
     materializer exposes the full lineage to explain()."""
     from big_data___knowledge_graph_construction_with_llm_spark.operators.dedup import (
         _banded,
-        _cross_candidates,
+        _cross_from_sides,
         minhash_signatures,
     )
     from big_data___knowledge_graph_construction_with_llm_spark.plans.tables import load
@@ -145,7 +145,11 @@ def test_decontaminate_is_cross_dataset_only(spark):
     banded = _banded(
         minhash_signatures(d.unionByName(bench), "doc_id", "text", 64), 64, 16
     )
-    p = plan_text(_cross_candidates(banded))
+    p = plan_text(
+        _cross_from_sides(
+            banded.filter(F.col("_id") < 0), banded.filter(F.col("_id") >= 0)
+        )
+    )
     # exactly ONE equi-join on the (band, bucket) LSH key...
     band_key_lines = [
         ln for ln in p.splitlines() if "keys" in ln and "band#" in ln
@@ -250,8 +254,7 @@ def test_exact_dedup_group_strategy_single_exchange(spark):
     """The default full-pass dedup shape (VERDICT r10 #3): ONE hash
     exchange keyed by the fingerprint, min_by aggregation, NO join —
     shuffle stays ≈ input at every scale instead of cliffing 280x when
-    AQE's broadcast threshold is crossed. The 'semi' strategy keeps the
-    broadcast-join shape for small corpora; both return identical rows."""
+    AQE's broadcast threshold is crossed."""
     from big_data___knowledge_graph_construction_with_llm_spark.operators.dedup import (
         exact_dedup_by_hash,
     )
@@ -263,11 +266,6 @@ def test_exact_dedup_group_strategy_single_exchange(spark):
     assert "Join" not in p
     assert p.count("Exchange") == 1
     assert "Aggregate" in p  # partial-aggregated: map-side combine
-
-    s = exact_dedup_by_hash(d, "text", "doc_id", strategy="semi")
-    assert sorted(r["doc_id"] for r in g.collect()) == sorted(
-        r["doc_id"] for r in s.collect()
-    )
 
 
 def test_tombstone_read_is_broadcast_antijoin(spark, tmp_path):

@@ -1091,13 +1091,14 @@ def test_cohort_retention_matches_reference(spark, events):
 )
 @settings(**_SETTINGS)
 def test_hashed_jaccard_equals_text_jaccard(spark, docs):
-    """Law: the store's text-free verify (_jaccard_from_fps over hashed
-    shingle sets) returns exactly the Jaccard the string-based verify
-    computes, for every doc pair of every random corpus."""
+    """Law: the store's text-free verify (the shared _set_jaccard over
+    _shingle_fps hash arrays) returns exactly the Jaccard the
+    string-based verify computes, for every doc pair of every random
+    corpus."""
     from itertools import combinations
 
     from big_data___knowledge_graph_construction_with_llm_spark.operators.dedup import (
-        _jaccard_from_fps,
+        _set_jaccard,
         _shingle_fps,
         ngram_jaccard_pairs,
     )
@@ -1116,8 +1117,8 @@ def test_hashed_jaccard_equals_text_jaccard(spark, docs):
     }
     from_fps = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in _jaccard_from_fps(
-            _shingle_fps(df, "doc_id", "text", 3), pairs
+        for r in _set_jaccard(
+            pairs, _shingle_fps(df, "doc_id", "text", 3)
         ).collect()
     }
     assert from_fps == from_text
